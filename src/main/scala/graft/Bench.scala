@@ -1,5 +1,10 @@
 package graft
+
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** Benchmark main: times every [[SparkEntry.queries]] entry against
   * `SPARK_GRAFT_SF_DIR` and emits ONE JSON line
@@ -31,52 +36,54 @@ import org.apache.spark.sql.SparkSession
   *    in some pass, detected via [[Memos.trainedEvents]]) so a reader
   *    can see exactly where shared training cost landed.
   *
+  * Per query the JSON also carries the `jobs`, `stages` and `tasks` it
+  * fired (see [[Counter]]).
+  *
   * The JSON is ALSO written to `BENCH.json` (override with
   * `SPARK_GRAFT_BENCH_OUT`) because sbt wraps stdout in `[info]` prefixes
   * that defeat line-oriented parsers.
   */
 object Bench {
+
+  /** Jobs, stages and tasks one query fired. */
+  final case class Counts(jobs: Long, stages: Long, tasks: Long) {
+    def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages, tasks - o.tasks)
+  }
+
+  /** Counts every job started on `spark`, every stage completed and that
+    * stage's tasks. At sf0.1 the mid-tail queries are bound by fixed
+    * per-action overhead, not data (r12/r13), so job and stage counts are
+    * what rank them.
+    */
+  final class Counter(spark: SparkSession) extends SparkListener {
+    private val jobs, stages, tasks = new AtomicLong
+    spark.sparkContext.addSparkListener(this)
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      tasks.addAndGet(s.stageInfo.numTasks.toLong)
+    }
+    /** The counts so far, once every event posted before the call has
+      * reached this listener.
+      */
+    def read(): Counts = {
+      ListenerBridge.drain(spark.sparkContext)
+      Counts(jobs.get, stages.get, tasks.get)
+    }
+  }
+
+  private final case class Run(sec: Double, ok: Boolean, counts: Counts)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // All cores unless pinned: the target env is local[32]; defaulting low
-    // would serialize the bench (round 1 ran 4 cores → 2.3× the baseline).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     // 3 floor samples: the headline is min-over-passes, and on a
     // contended machine two samples still let one noisy pass dominate a
     // query's floor (pass_totals regularly show a 1.3-3× spread here)
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    // Shuffle parallelism scales with DATA, not cores (same knob and
-    // rationale as graft.Verify): the full-table decades (sf10full /
-    // sf100full) need 256 so graph fixed-point hash builds stay
-    // executor-sized; the canonical sf0.1 bench keeps cores.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // Same block-manager hygiene as graft.Verify (r11 verdict noted
-      // the asymmetry): compressed serialized RDD blocks + periodic GC
-      // are what let the 600M-row graph family finish on a 59 GB
-      // scratch disk. The CODEC is parameterized because the right
-      // answer is deployment-dependent (guide §2.3: "measure both"):
-      // on a real cluster the shuffle crosses the network and zstd's
-      // ratio wins; in local mode every shuffle byte stays on one
-      // machine, the bench is CPU-bound, and zstd costs a measured
-      // ~8% across the shuffle-heavy families (r12 A/B at sf0.1) for
-      // bytes nobody transports — so the local default is lz4 (Spark's
-      // own default), with SPARK_GRAFT_IO_CODEC=zstd for cluster-like
-      // runs and the scratch-disk-bound full-table decades.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.rdd.compress",
-        sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "true"))
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // All cores unless pinned: the target env is local[32]; defaulting low
+    // would serialize the bench (round 1 ran 4 cores → 2.3× the baseline).
+    val spark = GraftSession()
     // Untimed warmup: JIT + codegen + shuffle machinery otherwise land on
     // whichever query happens to run first (~4s of noise on a cold JVM).
     try SparkEntry.queries("staging_events_monthly")(spark, sfDir)
@@ -108,9 +115,11 @@ object Bench {
     // feed its small failure time into the min-over-passes below — that
     // would silently deflate the headline total.
     val trainedIn = scala.collection.mutable.Set.empty[String]
-    def runPass(): Map[String, (Double, Boolean)] =
+    val counter = new Counter(spark)
+    def runPass(): Map[String, Run] =
       bench.map { case (name, fn) =>
         val ev0 = Memos.trainedEvents
+        val c0 = counter.read()
         val t0 = System.nanoTime()
         // noop sink forces full materialization of every output column
         // (count() would let Catalyst prune projection-only plans).
@@ -123,8 +132,9 @@ object Bench {
         // Drop anything the query persisted: leaked cache blocks would
         // otherwise squeeze execution memory for every later query.
         spark.catalog.clearCache()
+        val sec = (System.nanoTime() - t0) / 1e9
         if (Memos.trainedEvents > ev0) trainedIn += name
-        name -> ((System.nanoTime() - t0) / 1e9, ok)
+        name -> Run(sec, ok, counter.read() - c0)
       }
 
     val allPasses = (1 to math.max(1, passes)).map { i =>
@@ -138,20 +148,22 @@ object Bench {
     // real run time — a fail-fast error (missing file) would understate it
     // and a timeout-ish failure overstate it — so it contributes null to
     // `queries` and nothing to the headline `value`; `failures` /
-    // `failed_queries` carry the incompleteness signal.
-    val best: Map[String, Option[Double]] = bench.keys.map { name =>
-      val good = allPasses.flatMap(_.get(name)).collect { case (t, true) => t }
-      name -> (if (good.nonEmpty) Some(good.min) else None)
+    // `failed_queries` carry the incompleteness signal. The job, stage
+    // and task counts are those of the run whose time is reported.
+    val bestRun: Map[String, Option[Run]] = bench.keys.map { name =>
+      name -> allPasses.flatMap(_.get(name)).filter(_.ok).minByOption(_.sec)
     }.toMap
+    val best: Map[String, Option[Double]] = bestRun.map { case (k, r) => k -> r.map(_.sec) }
     val failedQueries = best.collect { case (name, None) => name }.toSeq.sorted
-    val qs = best.map { case (k, v) =>
-      s"\"" + k + "\":" + v.fold("null")(_.toString)
+    def perQuery(f: Run => Any): String = bestRun.map { case (k, v) =>
+      s"\"" + k + "\":" + v.fold("null")(f(_).toString)
     }.mkString("{", ",", "}")
+    val qs = perQuery(_.sec)
     // first-pass (cold-JVM) per-query seconds: for the trained families
     // this is the worst case (training + first codegen), the floor the
     // best case — together they bracket the query's real cost
     val coldJson = bench.keys.map { name =>
-      val c = allPasses.head.get(name).collect { case (t, true) => t }
+      val c = allPasses.head.get(name).collect { case Run(t, true, _) => t }
       s"\"" + name + "\":" + c.fold("null")(_.toString)
     }.mkString("{", ",", "}")
     val trainedJson = trainedIn.toSeq.sorted
@@ -203,7 +215,7 @@ object Bench {
       "vocab_stats")
     val baselineSubsetTotal =
       best.filter(kv => baselineQueries(kv._1)).values.flatten.sum
-    val passTotals = allPasses.map(_.values.map(_._1).sum)
+    val passTotals = allPasses.map(_.values.map(_.sec).sum)
       .mkString("[", ",", "]")
     val failedJson = failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Contention telemetry (round-8 verdict asked for it after a +17%
@@ -211,7 +223,7 @@ object Bench {
     // spread (max-min)/min across successful passes. A quiet machine
     // keeps the median near 0; broad large spreads = contended run.
     val spreads: Seq[(String, Double)] = bench.keys.toSeq.flatMap { name =>
-      val good = allPasses.flatMap(_.get(name)).collect { case (t, true) => t }
+      val good = allPasses.flatMap(_.get(name)).collect { case Run(t, true, _) => t }
       if (good.size >= 2 && good.min > 0)
         Some(name -> ((good.max - good.min) / good.min)) else None
     }
@@ -226,7 +238,7 @@ object Bench {
     val subsetJson = only.fold("null")(
       _.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]"))
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cold":$coldJson,"trained_queries":$trainedJson,"sf":"$sfDir","n_queries":${best.size},"failures":${failedQueries.size},"failed_queries":$failedJson,"baseline_subset_total":$baselineSubsetTotal,"pass_totals":$passTotals,"bench_only":$subsetJson,"spread_p50":${"%.3f".format(pct(0.5))},"spread_p90":${"%.3f".format(pct(0.9))},"noisiest_queries":$noisiest,"note":"value and per-query times are the min over successful runs across ${allPasses.size} in-JVM passes (a failed run never deflates the min; a query with no successful run is null in queries, excluded from value, and listed in failed_queries); JVM-level trained memos (BPE merges, centroids, trade pairs, LPA labels, suffix array) are RESET between passes so each pass pays every shared training once and the min includes it; trained_queries lists queries that fired a memo training in some pass; cold holds first-pass (cold-JVM) per-query seconds; pass_totals holds each raw pass sum; bench_only is the SPARK_GRAFT_BENCH_ONLY subset or null for the full surface; spread_p50/p90 are per-query (max-min)/min across passes (contention telemetry: quiet machine keeps p50 near 0; trained queries legitimately spread by where training lands); baseline_subset_total sums the original 38 queries the 49s baseline was recorded on"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"jobs":${perQuery(_.counts.jobs)},"stages":${perQuery(_.counts.stages)},"tasks":${perQuery(_.counts.tasks)},"cold":$coldJson,"trained_queries":$trainedJson,"sf":"$sfDir","n_queries":${best.size},"failures":${failedQueries.size},"failed_queries":$failedJson,"baseline_subset_total":$baselineSubsetTotal,"pass_totals":$passTotals,"bench_only":$subsetJson,"spread_p50":${"%.3f".format(pct(0.5))},"spread_p90":${"%.3f".format(pct(0.9))},"noisiest_queries":$noisiest,"note":"value and per-query times are the min over successful runs across ${allPasses.size} in-JVM passes (a failed run never deflates the min; a query with no successful run is null in queries, excluded from value, and listed in failed_queries); JVM-level trained memos (BPE merges, centroids, trade pairs, LPA labels, suffix array) are RESET between passes so each pass pays every shared training once and the min includes it; trained_queries lists queries that fired a memo training in some pass; jobs/stages/tasks hold, per query, the jobs started, stages completed and their tasks in the run whose time queries reports (null where queries is null), read by a listener after the listener bus drains; cold holds first-pass (cold-JVM) per-query seconds; pass_totals holds each raw pass sum; bench_only is the SPARK_GRAFT_BENCH_ONLY subset or null for the full surface; spread_p50/p90 are per-query (max-min)/min across passes (contention telemetry: quiet machine keeps p50 near 0; trained queries legitimately spread by where training lands); baseline_subset_total sums the original 38 queries the 49s baseline was recorded on"}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     try {
       val w = new java.io.PrintWriter(new java.io.File(out), "UTF-8")

@@ -66,16 +66,7 @@ object BpeBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val numMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "512").toInt
     val batchK = sys.env.getOrElse("SPARK_GRAFT_BPE_BATCHK", "16").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // One corpus pass, shared by both trainers: the bench isolates the
     // TRAINING loops (the quantity under test), not the tokenize+count.

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump the formatted physical plan of every contract query — the plan
@@ -12,14 +11,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores, not the machine's: the committed plans must not depend on it
+    val spark = GraftSession(cores = 4)
     val sb = new StringBuilder
     sb.append(s"# Physical plans (formatted) — $sfDir\n")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,46 +12,7 @@ object Verify {
     sys.props("graft.oracle.sfDir") = sfDir
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle parallelism scales with DATA, not cores: at sf100full
-    // (600M lineitem) 32 partitions put ~20M rows in each shuffle hash
-    // build and the graph fixed-points OOM; 256 keeps per-partition
-    // state executor-sized. Defaults to cores for the small gates.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // Shuffle files are reclaimed by the ContextCleaner only after
-      // the owning RDDs are garbage-collected — on a large heap the JVM
-      // may not GC for an hour, and an iterative query's dead
-      // generations pile up on disk until then (the sf100full HITS run
-      // filled the disk with reclaimable shuffle files). A short
-      // periodic GC bounds that window; no-op cost on small runs.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // Serialized RDD blocks are UNCOMPRESSED by default — the
-      // sf100full graph family's edge cache + per-generation
-      // checkpoint states overran a 59 GB scratch disk twice before
-      // any query finished. rdd.compress shrinks integer-heavy edge
-      // blocks ~3-4x for a decode cost that is noise next to the disk
-      // it saves; zstd beats the default lz4 on shuffle/spill ratio at
-      // comparable speed. Both are what a real 100 TB deployment runs
-      // with; correctness-neutral.
-      // (parameterized like graft.Bench, but the DEFAULT here stays
-      // zstd: correctness dumps are not timed, and the full-table
-      // decades are scratch-disk-bound where zstd's ratio is the point;
-      // the bench defaults to lz4 because local-mode shuffles never
-      // cross a NIC and zstd's CPU cost is a measured ~30% on the
-      // shuffle-heavy families)
-      .config("spark.rdd.compress",
-        sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "true"))
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(codec = "zstd")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

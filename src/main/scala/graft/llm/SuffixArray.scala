@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.BroadcastBudget
+import graft.ops.BroadcastBudget.hintIf
+
 /** One retained doubling-round rank table, restricted to the rows the
   * LCP lift can ever use (r13): a position whose level-`p` rank group is
   * a SINGLETON cannot share that rank with any OTHER position, so a lift
@@ -92,19 +95,6 @@ final case class SuffixArrayResult(seq: DataFrame, sa: DataFrame,
   * pair keys spread and the percentile cuts balance.
   */
 object SuffixArray {
-
-  /** Tied-row count at or below which the doubling round (and the LCP
-    * lift) joins via an EXPLICIT broadcast of the tied-rank side instead
-    * of shuffling corpus-grain frames (r13; guide §3.1 — pick the join
-    * strategy deliberately). The threshold is an ABSOLUTE broadcast
-    * budget (~32 MB of (g, r) longs at 1M rows — far under the 8 GB
-    * relation cap), not a scale factor: tie counts shrink geometrically
-    * with the round at every corpus size, so at 100 TB the early
-    * corpus-grain rounds keep the shuffle path and the switch fires
-    * exactly when the tied set is executor-small. Overridable per call
-    * so specs can force the shuffle path on tiny corpora.
-    */
-  val DefaultBroadcastTies: Long = 1L << 20
 
   /** The session's shuffle parallelism — the partition count every
     * exchange in the build would produce, used as the narrow-coalesce
@@ -223,10 +213,14 @@ object SuffixArray {
     * a vocabulary-grain cumulative count broadcast back onto the
     * sequence (same bounded-grid class as the vocabulary window in
     * [[corpusSeq]]).
+    *
+    * @param broadcastTies tied-row count at or below which a doubling
+    *        round joins via an explicit broadcast ([[BroadcastBudget]]);
+    *        specs pass 0 to force the shuffle path on tiny corpora
     */
   def build(docs: DataFrame, idCol: String, textCol: String,
             numRanges: Int = 32,
-            broadcastTies: Long = DefaultBroadcastTies): SuffixArrayResult = {
+            broadcastTies: Long = BroadcastBudget.Rows): SuffixArrayResult = {
     val seqRaw = corpusSeq(docs, idCol, textCol, numRanges)
     val seq = seqRaw.coalesce(confParts(seqRaw)).localCheckpoint(true)
     // corpusSeq's internal token-array checkpoint has no reader once the
@@ -326,7 +320,7 @@ object SuffixArray {
       // the rank table is pair-grain (≤ nTies rows) — on the small path
       // broadcast it too, so the join-back never exchanges `paired`
       val refined = paired
-        .join(if (small) broadcast(rk) else rk, Seq("ra", "rb"))
+        .join(hintIf(small)(rk), Seq("ra", "rb"))
         .select(col("g"), col("r"), col("tied"))
       // the broadcast path has NO exchange to reset the layout, so the
       // untied ∪ refined union would DOUBLE the partition count every
@@ -373,7 +367,7 @@ object SuffixArray {
     *         (r-1, r), `rank_hi = r` in 2..n.
     */
   def adjacentLcp(res: SuffixArrayResult,
-                  broadcastTies: Long = DefaultBroadcastTies): DataFrame = {
+                  broadcastTies: Long = BroadcastBudget.Rows): DataFrame = {
     val lo = res.sa.select((col("r") + 1L).as("r"), col("g").as("g_lo"))
     var pairs = res.sa.join(lo, Seq("r"))
       .select(col("r").as("rank_hi"), col("g_lo"), col("g").as("g_hi"),
@@ -385,8 +379,7 @@ object SuffixArray {
     val walk = res.levels.reverse.filter(_.nTied > 0)
     for ((lvl, i) <- walk.zipWithIndex) {
       val p = lvl.prefixLen
-      val hint: DataFrame => DataFrame =
-        if (lvl.nTied <= broadcastTies) broadcast(_) else identity
+      val hint = hintIf(lvl.nTied <= broadcastTies)
       val ra = hint(lvl.tiedRanks
         .select(col("g").as("__ga"), col("r").as("__ra")))
       val rb = hint(lvl.tiedRanks

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 
+import graft.ops.BroadcastBudget.hintIf
+
 /** Multi-source BFS depth — "how many hops is every node from this
   * seed set": crawl-frontier depth from trusted roots, influence
   * radius of a supplier cohort, blast radius of a bad-data source.
@@ -45,22 +47,20 @@ object Bfs {
     // node-grain blocks), and the counts gate EXPLICIT broadcasts of the
     // frontier (edge join) and visited set (anti-join) — checkpointed
     // generations are stats-less, so without the hint every round
-    // sort-merges the edge list (see [[PageRank.DefaultBroadcastNodes]])
+    // sort-merges the edge list (see [[BroadcastBudget]])
     var frontierCount = frontier.count()
     var visitedCount = frontierCount
-    def hintIf(small: Boolean): DataFrame => DataFrame =
-      if (small) broadcast(_) else identity
     var d = 0L
     while (d < maxDepth && frontierCount > 0) {
       d += 1
       val prevVisited = visited
       val prevFrontier = frontier
       val next = e.join(
-          hintIf(frontierCount <= PageRank.DefaultBroadcastNodes)(
+          hintIf(frontierCount <= BroadcastBudget.Rows)(
             prevFrontier.select(col("id").as("__f"))),
           col("src") === col("__f"))
         .select(col("dst").as("id")).distinct()
-        .join(hintIf(visitedCount <= PageRank.DefaultBroadcastNodes)(
+        .join(hintIf(visitedCount <= BroadcastBudget.Rows)(
             prevVisited.select(col("id").as("__v"))),
           col("id") === col("__v"), "left_anti")
         .withColumn("depth", lit(d))

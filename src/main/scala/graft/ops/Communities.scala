@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 
+import graft.ops.BroadcastBudget.hintIf
+
 /** Label-propagation community detection — the cheap, near-linear
   * community pass (Raghavan et al. 2007) that groups a host/citation
   * graph into densely-connected regions; on corpus pipelines it is the
@@ -52,12 +54,10 @@ object Communities {
       .withColumn("label", col("id"))
       .localCheckpoint(true)
     // one cheap count on the checkpointed node table gates the broadcast
-    // rounds (see [[PageRank.DefaultBroadcastNodes]]: checkpointed label
+    // rounds (see [[BroadcastBudget]]: checkpointed label
     // generations are stats-less, so the planner never auto-broadcasts
     // them and each round would sort-merge the full edge list)
-    val hint: DataFrame => DataFrame =
-      if (labels.count() <= PageRank.DefaultBroadcastNodes) broadcast(_)
-      else identity
+    val hint = hintIf(labels.count() <= BroadcastBudget.Rows)
     (1 to iters).foreach { _ =>
       val prev = labels
       val counts = sym
@@ -121,9 +121,7 @@ object Communities {
     // no stats — under the node budget both edge⋈label joins broadcast
     // instead of exchanging the symmetrized edge list twice (the gate
     // count reads the checkpointed sym blocks: one cheap job)
-    val hint: DataFrame => DataFrame =
-      if (sym.count() <= 2 * PageRank.DefaultBroadcastNodes) broadcast(_)
-      else identity
+    val hint = hintIf(sym.count() <= 2 * BroadcastBudget.Rows)
     val joined = sym
       .join(hint(labels.select(col("id").as("src"), col("label").as("__lsrc"))), Seq("src"))
       .join(hint(labels.select(col("id").as("dst"), col("label").as("__ldst"))), Seq("dst"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 
+import graft.ops.BroadcastBudget.hintIf
+
 /** Connected components over an edge list by iterative min-label
   * propagation: every node's label starts as its own id and each round
   * becomes the min of its label and its neighbors' labels, until a
@@ -23,18 +25,6 @@ import org.apache.spark.sql.graftbridge.CheckpointBridge
   */
 object ConnectedComponents {
 
-  /** Edge count at or below which a closure round joins via EXPLICIT
-    * broadcasts of the per-node minimum tables instead of exchanging the
-    * row-grain neighbor/edge frames (r13; guide §3.1). An ABSOLUTE
-    * broadcast budget (~16–32 MB of long pairs at 2^20 rows), not a
-    * scale tune: the star alternation contracts the edge set round over
-    * round at every graph size, and the count is already known
-    * driver-side from the convergence signature, so the switch costs no
-    * extra job and fires exactly when the state is executor-small. The
-    * corpus-grain early rounds keep the shuffle path unchanged.
-    */
-  val DefaultBroadcastEdges: Long = 1L << 20
-
   /** @param edges two-column frame of undirected edges (any orientation)
     * @return (id, component) — component = min node id reachable
     * @throws IllegalStateException if `maxIter` rounds pass without
@@ -53,10 +43,9 @@ object ConnectedComponents {
       .localCheckpoint(true)
     var labels = ckpt
     // one cheap count over the checkpointed edge blocks gates the
-    // broadcast rounds below (same budget rationale as
-    // [[DefaultBroadcastEdges]]; labels are node-grain ≤ |sym|)
-    val small = sym.count() <= DefaultBroadcastEdges
-    val hint: DataFrame => DataFrame = if (small) broadcast(_) else identity
+    // broadcast rounds below (see [[BroadcastBudget]]; labels are
+    // node-grain ≤ |sym|)
+    val hint = hintIf(sym.count() <= BroadcastBudget.Rows)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -164,9 +153,7 @@ object ConnectedComponents {
       // never exchanged (their aggregate-keyed exchange carries
       // partial-aggregated rows, so the join used to pay a SECOND
       // row-grain exchange of the same frame).
-      val small = eSig._1 <= DefaultBroadcastEdges
-      val hint: DataFrame => DataFrame =
-        if (small) broadcast(_) else identity
+      val hint = hintIf(eSig._1 <= BroadcastBudget.Rows)
       // large-star: every node links its LARGER neighbors to the minimum
       // of its neighborhood (incl. itself). Emitted edges keep u > v:
       // b > a >= min(Γ(a) ∪ {a}) = m.
@@ -210,8 +197,7 @@ object ConnectedComponents {
     // star forest: every non-root points at its root; roots (and nodes
     // that only appeared in self-loops) label themselves. At the
     // fixpoint |e| < |nodes|, so the same budget gates a broadcast here.
-    val eFinal =
-      if (eSig._1 <= DefaultBroadcastEdges) broadcast(e) else e
+    val eFinal = hintIf(eSig._1 <= BroadcastBudget.Rows)(e)
     val labeled = nodes.join(eFinal, nodes("id") === eFinal("u"), "left")
       .select(col("id"), coalesce(col("v"), col("id")).as("component"))
     (labeled, iter)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 
+import graft.ops.BroadcastBudget.hintIf
+
 /** HITS (hub/authority) scores over a directed edge list — the
   * bipartite-flavored companion to [[PageRank]]: authorities are nodes
   * pointed at by good hubs, hubs are nodes pointing at good
@@ -64,11 +66,10 @@ object Hits {
     var auths: DataFrame = null
     // node-grain generations fit the broadcast budget → both half-round
     // joins run map-side and neither the edge list nor the node table is
-    // ever exchanged (see [[PageRank.DefaultBroadcastNodes]]; the
+    // ever exchanged (see [[BroadcastBudget]]; the
     // checkpointed generations are stats-less LogicalRDDs the planner
     // never auto-broadcasts). Count already in hand — the gate is free.
-    val hint: DataFrame => DataFrame =
-      if (n <= PageRank.DefaultBroadcastNodes) broadcast(_) else identity
+    val hint = hintIf(n <= BroadcastBudget.Rows)
     (1 to iters).foreach { _ =>
       val prevH = hubs
       val prevA = auths

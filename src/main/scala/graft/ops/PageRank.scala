@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 
+import graft.ops.BroadcastBudget.hintIf
+
 /** PageRank over an edge list — the authority signal corpus pipelines
   * weight documents by (host-graph rank is a standard pretraining
   * quality feature). Same Spark-first iteration discipline as
@@ -25,22 +27,6 @@ import org.apache.spark.sql.graftbridge.CheckpointBridge
   * returning half-converged ranks.
   */
 object PageRank {
-
-  /** Node count at or below which a rank round joins via EXPLICIT
-    * broadcasts of the node-grain state tables (previous ranks into the
-    * edge join, the contribution sums into the node join) instead of
-    * exchanging the edge list and node table every round (r13; guide
-    * §3.1). Same rationale as
-    * [[ConnectedComponents.DefaultBroadcastEdges]]: the per-generation
-    * checkpoints are LogicalRDD leaves with no stats, so the planner
-    * NEVER auto-broadcasts them and every round pays two sort-merge
-    * exchanges of frames that are known driver-side to be tiny. An
-    * ABSOLUTE budget (~16–32 MB of (id, rank) pairs at 2^20 rows), not a
-    * scale tune: the node count is already known driver-side from the
-    * init count, so the gate costs no extra job, and corpus-scale graphs
-    * keep the shuffle path unchanged.
-    */
-  val DefaultBroadcastNodes: Long = 1L << 20
 
   /** @param edges directed (src, dst) frame; parallel edges count once
     * @param maxIter L1 delta contracts at the DAMPING rate in the worst
@@ -73,10 +59,9 @@ object PageRank {
     // shared `base`/`e` leaves that later rounds still read
     var ckpt = base.withColumn("rank", lit(1.0 / n)).localCheckpoint(true)
     // node-grain state fits the broadcast budget → per-round joins run
-    // map-side and the edge/node frames are never exchanged (see
-    // DefaultBroadcastNodes; count already in hand)
-    val hint: DataFrame => DataFrame =
-      if (n <= DefaultBroadcastNodes) broadcast(_) else identity
+    // map-side and the edge/node frames are never exchanged (count
+    // already in hand)
+    val hint = hintIf(n <= BroadcastBudget.Rows)
     var iter = 0
     var delta = Double.MaxValue
     while (delta > tol && iter < maxIter) {
@@ -148,52 +133,11 @@ object PageRank {
   def ranksFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
                       iters: Int = 3, unit: Long = 1000000000000L,
                       dampNum: Long = 85L, dampDen: Long = 100L,
-                      assumeDistinct: Boolean = false): DataFrame = {
-    require(iters >= 1, s"iters=$iters")
-    require(dampNum > 0 && dampNum < dampDen,
-      s"damping $dampNum/$dampDen out of (0,1)")
-    // assumeDistinct: caller certifies the (src, dst) pairs are already
-    // distinct (e.g. derived from a distinct-and-checkpointed shared
-    // edge memo), so the canonicalizing shuffle is skipped — one full
-    // edge exchange saved per call, the same contract style as the
-    // maxDegree caps (guide §2.4: remove shuffles outright)
-    val e0 = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-    val e = (if (assumeDistinct) e0 else e0.distinct()).localCheckpoint(true)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    val base = nodes.join(deg, nodes("id") === deg("src"), "left")
-      .select(col("id"), col("__deg")).localCheckpoint(true)
-    val n = base.count()
-    require(n > 0, "empty graph")
-    val basePart = ((dampDen - dampNum) * unit / dampDen) / n
-    var cur = base.withColumn("rank", lit(unit / n)).localCheckpoint(true)
-    // see DefaultBroadcastNodes: checkpointed generations have no stats,
-    // so without the explicit hint every round sort-merges the edge list
-    val hint: DataFrame => DataFrame =
-      if (n <= DefaultBroadcastNodes) broadcast(_) else identity
-    (1 to iters).foreach { _ =>
-      val prev = cur
-      val dangPerNode = prev.where(col("__deg").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0L))).head().getLong(0) / n
-      val contribs = e
-        .join(hint(prev.select(col("id").as("__s"), col("rank"), col("__deg"))),
-          col("src") === col("__s"))
-        .select(col("dst"), expr("rank div __deg").as("__c"))
-        .groupBy(col("dst")).agg(sum(col("__c")).as("__in"))
-      cur = base.join(hint(contribs), base("id") === contribs("dst"), "left")
-        .select(col("id"), col("__deg"),
-          (lit(basePart) + expr(
-            s"(${dampNum}L * (coalesce(__in, 0L) + ${dangPerNode}L)) div ${dampDen}L"))
-            .as("rank"))
-        .localCheckpoint(true)
-      CheckpointBridge.release(prev)
-    }
-    CheckpointBridge.release(e)
-    CheckpointBridge.release(base)
-    cur.select(col("id"), col("rank").as("rank_fp"))
-  }
+                      assumeDistinct: Boolean = false): DataFrame =
+    // every node a seed: |S| = n and [v ∈ S] = 1, so each term of the
+    // personalized round below is the uniform round's term
+    fixedPointRounds(edges, srcCol, dstCol, None, iters, unit, dampNum,
+      dampDen, assumeDistinct)
 
   /** Personalized (seeded) fixed-point PageRank — TrustRank-style
     * quality propagation: the teleport mass returns ONLY to the seed
@@ -217,31 +161,52 @@ object PageRank {
                                   unit: Long = 1000000000000L,
                                   dampNum: Long = 85L,
                                   dampDen: Long = 100L,
-                                  assumeDistinct: Boolean = false): DataFrame = {
+                                  assumeDistinct: Boolean = false): DataFrame =
+    fixedPointRounds(edges, srcCol, dstCol, Some(seeds -> seedCol), iters,
+      unit, dampNum, dampDen, assumeDistinct)
+
+  /** The rounds of [[ranksPersonalizedFixedPoint]]; `seeds = None` makes
+    * every node a seed, which is [[ranksFixedPoint]].
+    */
+  private def fixedPointRounds(edges: DataFrame, srcCol: String,
+                               dstCol: String,
+                               seeds: Option[(DataFrame, String)],
+                               iters: Int, unit: Long, dampNum: Long,
+                               dampDen: Long,
+                               assumeDistinct: Boolean): DataFrame = {
     require(iters >= 1, s"iters=$iters")
     require(dampNum > 0 && dampNum < dampDen,
       s"damping $dampNum/$dampDen out of (0,1)")
-    // assumeDistinct: see ranksFixedPoint
+    // assumeDistinct: caller certifies the (src, dst) pairs are already
+    // distinct (e.g. derived from a distinct-and-checkpointed shared
+    // edge memo), so the canonicalizing shuffle is skipped — one full
+    // edge exchange saved per call, the same contract style as the
+    // maxDegree caps (guide §2.4: remove shuffles outright)
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
     val e = (if (assumeDistinct) e0 else e0.distinct()).localCheckpoint(true)
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    val seedSet = seeds.select(col(seedCol).cast("long").as("id")).distinct()
-    val base = nodes.join(deg, nodes("id") === deg("src"), "left")
+    val withDeg = nodes.join(deg, nodes("id") === deg("src"), "left")
       .select(nodes("id"), col("__deg"))
-      .join(seedSet.select(col("id").as("__sid"), lit(1L).as("__seed")),
-        nodes("id") === col("__sid"), "left")
-      .select(col("id"), col("__deg"),
-        coalesce(col("__seed"), lit(0L)).as("__seed"))
-      .localCheckpoint(true)
+    val base = (seeds match {
+      case Some((seedDf, seedCol)) =>
+        val seedSet = seedDf.select(col(seedCol).cast("long").as("__sid"))
+          .distinct()
+        withDeg.join(seedSet.withColumn("__seed", lit(1L)),
+            col("id") === col("__sid"), "left")
+          .select(col("id"), col("__deg"),
+            coalesce(col("__seed"), lit(0L)).as("__seed"))
+      case None => withDeg.withColumn("__seed", lit(1L))
+    }).localCheckpoint(true)
     // one aggregate row carries BOTH the seed count and the node count
     // (the node count gates the broadcast rounds below — no extra job)
     val seedRow = base.agg(coalesce(sum(col("__seed")), lit(0L)),
       count(lit(1))).head()
     val nSeeds = seedRow.getLong(0)
     val n = seedRow.getLong(1)
+    if (seeds.isEmpty) require(n > 0, "empty graph")
     if (nSeeds == 0) {
       // no seed intersects the graph → zero trust everywhere. Return
       // the empty frame rather than throwing: a throwing query builder
@@ -258,9 +223,7 @@ object PageRank {
     val basePart = ((dampDen - dampNum) * unit / dampDen) / nSeeds
     var cur = base.withColumn("rank",
         col("__seed") * lit(unit / nSeeds)).localCheckpoint(true)
-    // see DefaultBroadcastNodes (same gate as ranksFixedPoint)
-    val hint: DataFrame => DataFrame =
-      if (n <= DefaultBroadcastNodes) broadcast(_) else identity
+    val hint = hintIf(n <= BroadcastBudget.Rows)
     (1 to iters).foreach { _ =>
       val prev = cur
       val dangPerSeed = prev.where(col("__deg").isNull)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 
+import graft.ops.BroadcastBudget.hintIf
+
 /** Deterministic "random" walks over a graph — the corpus generator for
   * DeepWalk/node2vec-style graph embeddings (Perozzi et al. 2014): a
   * walk per seed node, each step moving to a pseudo-uniformly chosen
@@ -51,11 +53,9 @@ object Walks {
     // the walk frontier is ≤ one row per seed and only ever shrinks
     // (dead ends stop emitting) — under the budget every step's edge
     // join broadcasts the frontier, so the edge list is never exchanged
-    // (see [[PageRank.DefaultBroadcastNodes]]; the count reads the
+    // (see [[BroadcastBudget]]; the count reads the
     // checkpointed seed blocks once)
-    val hint: DataFrame => DataFrame =
-      if (cur.count() <= PageRank.DefaultBroadcastNodes) broadcast(_)
-      else identity
+    val hint = hintIf(cur.count() <= BroadcastBudget.Rows)
     // emitted rows fold into a checkpointed accumulator each round so a
     // generation's blocks can be released the moment the accumulator has
     // materialized its copy (releasing while the final union still reads

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only profiling harness (not part of the driver contract, never
@@ -17,22 +16,7 @@ import org.apache.spark.sql.functions._
 object ProfileSuffix {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.rdd.compress", "true")
-      .config("spark.io.compression.codec", "lz4")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_PROFILE_AQE", "true"))
-      .config("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("GRAFT_PROFILE_CODEGEN", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[profile] $label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")

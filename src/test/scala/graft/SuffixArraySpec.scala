@@ -198,7 +198,7 @@ class SuffixArraySpec extends AnyFunSuite {
     def lcps(r: graft.llm.SuffixArrayResult, bt: Long) =
       SuffixArray.adjacentLcp(r, broadcastTies = bt)
         .collect().map(x => (x.getLong(0), x.getLong(3))).toSet
-    assert(lcps(small, SuffixArray.DefaultBroadcastTies) === lcps(big, 0L))
+    assert(lcps(small, graft.ops.BroadcastBudget.Rows) === lcps(big, 0L))
   }
 
   test("empty and single-token documents are handled") {
