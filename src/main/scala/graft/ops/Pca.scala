@@ -90,10 +90,15 @@ object Pca {
       .select(col("__i"), col("__j"),
         floorDivQ(col("__n") * col("__g") - col("__s") * col("__sj"),
           lit(1000000L)).as("__c"))
-    // dims from the vector itself (one 1-row job): the scatter matrix is
-    // dims²-grain, so the bound is known before anything is collected
-    val nDims = df.select(size(col(vecCol))).take(1)
-      .headOption.map(_.getInt(0)).getOrElse(0)
+    // dims from the vectors themselves (one aggregate): the scatter matrix
+    // is dims²-grain, so the bound is known before anything is collected.
+    // Null vectors explode to nothing and are left out, as in the Gram
+    // join; vectors of different sizes have no common dims and are refused
+    val sizes = df.where(col(vecCol).isNotNull)
+      .agg(min(size(col(vecCol))), max(size(col(vecCol)))).head()
+    val nDims = if (sizes.isNullAt(0)) 0 else sizes.getInt(0)
+    require(sizes.isNullAt(0) || nDims == sizes.getInt(1),
+      s"ragged vectors in $vecCol: sizes from $nDims to ${sizes.get(1)}")
     if (nDims <= driverIterDims)
       return topComponentDriverIter(scatterDef, iters)
     val scatter = scatterDef.localCheckpoint(true)

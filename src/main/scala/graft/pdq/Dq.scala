@@ -26,10 +26,12 @@ object Dq {
 
   /** Single-pass DQ metrics piggybacked on the frame's OWN action via
     * `Dataset.observe`: row count, per-key null counts, per-measure
-    * negative counts materialize with the write/collect that consumes
-    * the frame — no second scan. The reference runs each gate as its own
-    * Postgres query after loading (dags/pdq_etl_dag.py:383-429); at
-    * 100 TB a separate gate pass re-reads the table, this one is free.
+    * negative counts and `n_negative` (rows with any negative measure —
+    * the [[negativeMeasures]] count, 0 on an empty frame) materialize
+    * with the write/collect that consumes the frame — no second scan. The
+    * reference runs each gate as its own Postgres query after loading
+    * (dags/pdq_etl_dag.py:383-429); at 100 TB a separate gate pass
+    * re-reads the table, this one is free.
     *
     * The returned [[Observation]] yields its metric map after the first
     * action on the returned frame (`obs.get` blocks until then). Gates
@@ -44,8 +46,22 @@ object Dq {
       (keyCols.map(c =>
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"null_$c")) ++
         measureCols.map(c =>
-          sum(when(col(c) < 0, 1L).otherwise(0L)).as(s"neg_$c")))
+          sum(when(col(c) < 0, 1L).otherwise(0L)).as(s"neg_$c")) ++
+        measureCols.map(col(_) < 0).reduceOption(_ || _)
+          .map(count_if(_).as("n_negative")))
     (df.observe(obs, aggs.head, aggs.tail: _*), obs)
+  }
+
+  /** Row counts of several frames from ONE action rather than a
+    * `.count()` per frame — the counts-only form of the gates that must
+    * shuffle ([[duplicateKeys]], [[reconcile]]).
+    */
+  def counts(frames: Seq[DataFrame]): Seq[Long] = {
+    val byIndex = frames.zipWithIndex
+      .map { case (f, i) => f.agg(lit(i).as("i"), count(lit(1)).as("n")) }
+      .reduce(_ unionByName _).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    frames.indices.map(byIndex)
   }
 
   /** A2 + J1-J4 + U1 + O2 — rollup reconciliation

@@ -1,6 +1,9 @@
 package graft.pdq
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.IOException
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Casts
@@ -53,16 +56,31 @@ object Pipeline {
     * propagate — treating it as first-load would overwrite the path with
     * only the incoming rows and silently discard everything previously
     * merged (round-2 advice).
+    *
+    * A first load writes `df` to the path. A merge writes the merged rows
+    * to the hidden sibling `.<name>.next`, then deletes the dim and renames
+    * the sibling into its place, so the old files stay until the merged
+    * ones are complete. A swap cut between its delete and its rename
+    * leaves a complete sibling (`_SUCCESS`) and no dim; the next call
+    * promotes that sibling first, instead of taking the missing dim for a
+    * first load and losing its rows. A sibling without `_SUCCESS` is an
+    * unfinished merge write: ignored, and overwritten by the next merge.
     */
   def upsertDim(spark: SparkSession, df: DataFrame, keys: Seq[String],
                 path: String): Unit = {
-    val incoming = df.localCheckpoint(true)
-    val merged =
-      if (graft.sinks.Idempotent.pathExists(spark, path))
-        Upsert.merge(spark.read.parquet(path), incoming, keys)
-          .localCheckpoint(true)
-      else incoming // first load
-    merged.write.mode("overwrite").parquet(path)
+    val dim = new Path(path)
+    val fs = dim.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val next = new Path(dim.getParent, s".${dim.getName}.next")
+    def swapIn(): Unit =
+      if (!fs.rename(next, dim)) throw new IOException(s"cannot rename $next to $dim")
+    if (!fs.exists(dim) && fs.exists(new Path(next, "_SUCCESS"))) swapIn()
+    if (!fs.exists(dim)) df.write.mode("overwrite").parquet(path) // first load
+    else {
+      Upsert.merge(spark.read.parquet(path), df, keys)
+        .write.mode("overwrite").parquet(next.toString)
+      fs.delete(dim, true)
+      swapIn()
+    }
   }
 
   /** Run one month end-to-end from two `.dsv` exports into a parquet
@@ -78,16 +96,18 @@ object Pipeline {
       s"$warehouse/raw_lease", yyyymm)
 
     // ---- transform (spark_transform_* jobs) ----
+    // the counts-only DQ gate (non-negativity) rides each staging write
     val rawOp = spark.read.parquet(s"$warehouse/raw_operator")
       .where(col("yyyymm") === yyyymm)
     val opMonthly = Staging.operatorMonthly(rawOp, Some(yyyymm)).cache()
-    Idempotent.writeMonthSlice(opMonthly, s"$warehouse/staging_operator")
+    val (opStaged, opObs) = Dq.observedMetrics(opMonthly, Nil, Measures)
+    Idempotent.writeMonthSlice(opStaged, s"$warehouse/staging_operator")
 
     val rawLease = spark.read.parquet(s"$warehouse/raw_lease")
       .where(col("yyyymm") === yyyymm)
-    val wide = Staging.leaseWide(rawLease, Some(yyyymm)).cache()
-    val leaseMonthly = Staging.leaseMonthly(wide).cache()
-    Idempotent.writeMonthSlice(leaseMonthly, s"$warehouse/staging_lease")
+    val leaseMonthly = Staging.leaseMonthly(Staging.leaseWide(rawLease, Some(yyyymm))).cache()
+    val (leaseStaged, leaseObs) = Dq.observedMetrics(leaseMonthly, Nil, Measures)
+    Idempotent.writeMonthSlice(leaseStaged, s"$warehouse/staging_lease")
 
     // ---- model curated (spark_model_curated job) ----
     upsertDim(spark, Curated.dimOperator(opMonthly), Seq("operator_no"), s"$warehouse/dim_operator")
@@ -100,15 +120,15 @@ object Pipeline {
       s"$warehouse/fact_lease_monthly")
 
     // ---- DQ gates (dq_non_negative, dq_uniques, dq_rollup_log) ----
-    val negOp = Dq.negativeMeasures(opMonthly, Measures).count()
-    val negLease = Dq.negativeMeasures(leaseMonthly, Measures).count()
-    val dupOp = Dq.duplicateKeys(opMonthly, Seq("operator_no", "yyyymm")).count()
-    val dupLease = Dq.duplicateKeys(leaseMonthly, Seq("lease_key", "yyyymm")).count()
-    val mismatches = Dq.reconcile(
-      opMonthly.select(col("operator_no") +: Measures.map(col): _*),
-      leaseMonthly.select(col("operator_no") +: Measures.map(col): _*),
-      "operator_no", Measures, tol = 0.5, checkType = "operator_vs_lease").count()
-    wide.unpersist(); opMonthly.unpersist(); leaseMonthly.unpersist()
-    DqReport(negOp, negLease, dupOp, dupLease, mismatches)
+    val Seq(dupOp, dupLease, mismatches) = Dq.counts(Seq(
+      Dq.duplicateKeys(opMonthly, Seq("operator_no", "yyyymm")),
+      Dq.duplicateKeys(leaseMonthly, Seq("lease_key", "yyyymm")),
+      Dq.reconcile(
+        opMonthly.select(col("operator_no") +: Measures.map(col): _*),
+        leaseMonthly.select(col("operator_no") +: Measures.map(col): _*),
+        "operator_no", Measures, tol = 0.5, checkType = "operator_vs_lease")))
+    def negatives(obs: Observation) = obs.get("n_negative").asInstanceOf[Long]
+    opMonthly.unpersist(); leaseMonthly.unpersist()
+    DqReport(negatives(opObs), negatives(leaseObs), dupOp, dupLease, mismatches)
   }
 }

@@ -64,8 +64,25 @@ class DqSpec extends AnyFunSuite {
     assert(m("n_rows") === 4L)
     assert(m("null_k") === 1L)
     assert(m("neg_v") === 2L)
+    assert(m("n_negative") === 2L)
     // and the written data is untouched by the observation
     assert(spark.read.parquet(path).count() === 4)
+
+    // n_negative counts ROWS with any negative measure, as
+    // negativeMeasures does; an empty frame gives 0, not null
+    val two = Seq((1L, -1.0, -2.0), (2L, 0.0, -1.0), (3L, 1.0, 1.0)).toDF("k", "a", "b")
+    for (frame <- Seq(two, two.limit(0))) {
+      val (o, ob) = graft.pdq.Dq.observedMetrics(frame, Seq("k"), Seq("a", "b"))
+      o.write.mode("overwrite").parquet(path)
+      assert(ob.get("n_negative") === Dq.negativeMeasures(frame, Seq("a", "b")).count())
+    }
+  }
+
+  test("counts: several frames' row counts from one action, empty frames included") {
+    val df = Seq(1, 2, 2, 3, 3, 3).toDF("k")
+    val frames = Seq(df, df.where($"k" > 9), Dq.duplicateKeys(df, Seq("k")))
+    assert(Dq.counts(frames) === frames.map(_.count()))
+    assert(Dq.counts(frames) === Seq(6L, 0L, 2L))
   }
 
   test("equi-width histogram: integer edges, explicit under/overflow, counts sum to group size") {

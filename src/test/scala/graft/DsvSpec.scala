@@ -84,4 +84,54 @@ class DsvSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("single file"))
   }
+
+  private def writeLines(f: java.io.File, lines: Seq[String]): String = {
+    val w = new java.io.PrintWriter(f)
+    lines.foreach(w.println); w.close(); f.getAbsolutePath
+  }
+
+  test("a file of a few thousand lines reads as several splits, rows as Spark CSV's") {
+    val dir = Files.createTempDirectory("dsvsplit").toFile
+    val header = "ID}NAME}OIL"
+    val path = writeLines(new java.io.File(dir, "big.dsv"), header +:
+      (0 until 4000).map(i => if (i == 2000) header else s"$i}name ${i % 37}}${i * 0.25}"))
+    val df = Dsv.read(spark, path)
+    assert(df.rdd.getNumPartitions > 1)
+    val ref = spark.read.option("header", "true").option("sep", "}").csv(path)
+    assert(df.columns.toSeq === ref.columns.toSeq)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+    assert(df.count() === 4000)
+    assert(rows(df) === rows(ref))
+    // the data line byte-equal to the header is data, not a second header
+    assert(df.where(org.apache.spark.sql.functions.col("ID") === "ID").count() === 1)
+  }
+
+  test("a directory of headered files yields every file's data rows and no header") {
+    val dir = Files.createTempDirectory("dsvdir").toFile
+    writeLines(new java.io.File(dir, "part-0.dsv"), Seq("A}B", "1}x", "2}y"))
+    writeLines(new java.io.File(dir, "part-1.dsv"), Seq("A}B", "3}z"))
+    writeLines(new java.io.File(dir, "_SUCCESS"), Nil)
+    val got = Dsv.read(spark, dir.getAbsolutePath).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(got === Set(("1", "x"), ("2", "y"), ("3", "z")))
+  }
+
+  test("an empty file yields no rows with the declared columns") {
+    val dir = Files.createTempDirectory("dsvempty").toFile
+    val path = writeLines(new java.io.File(dir, "empty.dsv"), Nil)
+    val df = Dsv.read(spark, path, schemaCols = Seq("A", "B"))
+    assert(df.columns.toSeq === Seq("A", "B"))
+    assert(df.count() === 0)
+  }
+
+  test("empty and repeated header names are named as Spark's CSV header reader names them") {
+    val dir = Files.createTempDirectory("dsvnames").toFile
+    val path = writeLines(new java.io.File(dir, "n.dsv"), Seq("A}a} B }", "1}2}3}4"))
+    val ref = spark.read.option("header", "true").option("sep", "}").csv(path)
+    val df = Dsv.read(spark, path)
+    assert(df.columns.toSeq === ref.columns.toSeq.map(_.trim))
+    assert(df.columns.toSeq === Seq("A0", "a1", "B", "_c3"))
+    assert(df.collect().map(_.toSeq).toSeq === Seq(Seq("1", "2", "3", "4")))
+  }
 }

@@ -74,4 +74,21 @@ class PcaSpec extends AnyFunSuite {
       .collect().toSeq
     assert(run(1024) === run(0))
   }
+
+  test("refuses ragged vectors instead of reading dims from one row") {
+    val ragged = Seq((1L, Array(1.0f, 2.0f, 3.0f)), (2L, Array(1.0f, 2.0f)),
+      (3L, Array(0.5f, 0.5f, 0.5f))).toDF("vec_id", "embedding")
+    for (bound <- Seq(1024, 0)) {
+      val ex = intercept[IllegalArgumentException] {
+        Pca.topComponentFixedPoint(ragged, "vec_id", "embedding", iters = 2,
+          driverIterDims = bound)
+      }
+      assert(ex.getMessage.contains("ragged"))
+    }
+    // null vectors are not ragged: they explode to nothing, as before
+    val withNull = Seq((1L, Array(1.0f, 0.0f)), (2L, null), (3L, Array(0.0f, 1.0f)),
+      (4L, Array(1.0f, 1.0f))).toDF("vec_id", "embedding")
+    assert(Pca.topComponentFixedPoint(withNull, "vec_id", "embedding", iters = 2)
+      .count() === 2)
+  }
 }

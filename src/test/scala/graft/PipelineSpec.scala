@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pdq.Pipeline
+import graft.pdq.{Dq, Pipeline}
 
 /** End-to-end reference DAG on FIXTURES.md §A-shaped .dsv inputs:
   * extract → raw → staging → curated → DQ, twice (idempotency).
@@ -92,5 +92,63 @@ class PipelineSpec extends AnyFunSuite {
     // the corrupt files are still there — nothing got wiped/overwritten
     assert(dir.listFiles().exists(pf =>
       pf.getName.endsWith(".parquet") && pf.length() === "not parquet".length))
+  }
+
+  private val Measures = Seq("oil_bbl", "gas_mcf", "cond_bbl", "csgd_mcf")
+
+  test("non-zero DQ gates: runMonth's report equals the gates run on the staged slices") {
+    val root = Files.createTempDirectory("pdqdq").toString
+    val opDsv = write(s"$root/op.dsv",
+      "OPERATOR_NO}OPERATOR_NAME}CYCLE_YEAR}CYCLE_MONTH}CYCLE_YEAR_MONTH}OPER_OIL_PROD_VOL}OPER_GAS_PROD_VOL}OPER_COND_PROD_VOL}OPER_CSGD_PROD_VOL",
+      "123456}ACME}2024}01}202401}100}200}0}0",
+      // the same operator row twice: staging keeps both, a duplicate key
+      "123456}ACME}2024}01}202401}100}200}0}0",
+      "789012}JONES}2024}01}202401}50}0}0}0")
+    val leaseDsv = write(s"$root/lease.dsv",
+      "OPERATOR_NO}DISTRICT_NO}FIELD_NO}LEASE_NO}LEASE_NAME}CYCLE_YEAR}CYCLE_MONTH}CYCLE_YEAR_MONTH}OIL_PROD_VOL}GAS_PROD_VOL}COND_PROD_VOL}CSGD_PROD_VOL",
+      "123456}08}54321}11111}SMITH}2024}01}202401}100}200}0}0",
+      // a negative measure, and JONES' only lease: -5 vs its 50 mismatches
+      "789012}02}9}22222}JONES}2024}01}202401}-5}0}0}0")
+    val wh = s"$root/wh"
+
+    val dq = Pipeline.runMonth(spark, opDsv, leaseDsv, wh, 202401)
+    val so = spark.read.parquet(s"$wh/staging_operator").where($"yyyymm" === 202401)
+    val sl = spark.read.parquet(s"$wh/staging_lease").where($"yyyymm" === 202401)
+    val gates = Pipeline.DqReport(
+      Dq.negativeMeasures(so, Measures).count(),
+      Dq.negativeMeasures(sl, Measures).count(),
+      Dq.duplicateKeys(so, Seq("operator_no", "yyyymm")).count(),
+      Dq.duplicateKeys(sl, Seq("lease_key", "yyyymm")).count(),
+      Dq.reconcile(so.select(($"operator_no" +: Measures.map(col)): _*),
+        sl.select(($"operator_no" +: Measures.map(col)): _*),
+        "operator_no", Measures, tol = 0.5).count())
+    assert(dq === gates)
+    assert(dq === Pipeline.DqReport(0, 1, 1, 0, 1))
+  }
+
+  test("upsertDim: an interrupted swap is promoted, an unfinished sibling is overwritten") {
+    val root = Files.createTempDirectory("pdqswap").toString
+    val path = s"$root/dim_x"
+    val next = s"$root/.dim_x.next"
+    def rows(p: String) = spark.read.parquet(p).orderBy("k").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    def exists(p: String) = new java.io.File(p).exists()
+
+    // cut between delete and rename: the merged dim is complete in the
+    // sibling and the dim is gone. It is promoted, then merged into —
+    // not taken for a first load that would drop rows 1 and 2
+    Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(next)
+    assert(exists(s"$next/_SUCCESS") && !exists(path))
+    Pipeline.upsertDim(spark, Seq((2, "b2"), (3, "c")).toDF("k", "v"), Seq("k"), path)
+    assert(rows(path) === Seq((1, "a"), (2, "b2"), (3, "c")))
+    assert(!exists(next))
+
+    // cut during the merge write: the sibling has no _SUCCESS. It is not
+    // promoted; the next merge overwrites it and swaps in the right rows
+    new java.io.File(next).mkdirs()
+    val w = new java.io.PrintWriter(s"$next/part-00000.parquet"); w.print("partial"); w.close()
+    Pipeline.upsertDim(spark, Seq((4, "d")).toDF("k", "v"), Seq("k"), path)
+    assert(rows(path) === Seq((1, "a"), (2, "b2"), (3, "c"), (4, "d")))
+    assert(!exists(next))
   }
 }
