@@ -1,6 +1,11 @@
 package graft.pdq
 
 import java.io.IOException
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
@@ -10,15 +15,17 @@ import graft.ops.Casts
 import graft.sinks.{Idempotent, Upsert}
 import graft.sources.{Dsv, RawStore}
 
-/** The reference's whole DAG as sequential library calls (entry point A,
+/** The reference's whole DAG as library calls (entry point A,
   * SURVEY.md §3.1): extract `.dsv` → raw JSON layer → typed staging →
   * curated star → DQ gates, all month-sliced and idempotent.
   *
   * Orchestration-level mapping (X2): Airflow task boundaries become
-  * function boundaries inside one SparkSession; every layer write is a
-  * dynamic-partition month-slice overwrite, so re-running a month is the
-  * same delete-slice-then-insert the reference does with psycopg2 + JDBC
-  * appends (dags/pdq_etl_dag.py:514-516; transform_operator.py:16-31).
+  * function boundaries inside one SparkSession, and the DAG's fan-out
+  * becomes Spark actions submitted concurrently from the driver
+  * ([[runMonth]]). Every layer write replaces a month slice, so re-running
+  * a month is the same delete-slice-then-insert the reference does with
+  * psycopg2 + JDBC appends (dags/pdq_etl_dag.py:514-516;
+  * transform_operator.py:16-31).
   */
 object Pipeline {
 
@@ -33,7 +40,8 @@ object Pipeline {
   /** Extract a `.dsv` into the raw layer: all-string read with null-token
     * normalization (S1/S2/P10), month-key derivation over the naming
     * variants (P8), validity floor (P4), JSON-encode (S6), idempotent
-    * month-slice write (S7). Mirrors dags/pdq_etl_dag.py:183-249.
+    * month-slice write (S7; a month absent from the export empties the
+    * slice). Mirrors dags/pdq_etl_dag.py:183-249.
     */
   def extract(spark: SparkSession, dsvPath: String, schemaCols: Seq[String],
               rawPath: String, yyyymm: Int): Unit = {
@@ -46,7 +54,7 @@ object Pipeline {
     val sliced = withMonth
       .where(Casts.validMonth(col("__yyyymm")) && col("__yyyymm") === yyyymm)
       .withColumnRenamed("__yyyymm", "yyyymm")
-    Idempotent.writeMonthSlice(RawStore.encode(sliced), rawPath)
+    writeMonth(RawStore.encode(sliced), rawPath, yyyymm)
   }
 
   /** SCD1 upsert of a dimension path (S8, model_curated.py:72-101 as a
@@ -57,7 +65,8 @@ object Pipeline {
     * only the incoming rows and silently discard everything previously
     * merged (round-2 advice).
     *
-    * A first load writes `df` to the path. A merge writes the merged rows
+    * A first load writes `df` to the path. A merge reads the dim with
+    * `df`'s schema (no footer-inference job) and writes the merged rows
     * to the hidden sibling `.<name>.next`, then deletes the dim and renames
     * the sibling into its place, so the old files stay until the merged
     * ones are complete. A swap cut between its delete and its rename
@@ -76,7 +85,7 @@ object Pipeline {
     if (!fs.exists(dim) && fs.exists(new Path(next, "_SUCCESS"))) swapIn()
     if (!fs.exists(dim)) df.write.mode("overwrite").parquet(path) // first load
     else {
-      Upsert.merge(spark.read.parquet(path), df, keys)
+      Upsert.merge(spark.read.schema(df.schema).parquet(path), df, keys)
         .write.mode("overwrite").parquet(next.toString)
       fs.delete(dim, true)
       swapIn()
@@ -86,49 +95,98 @@ object Pipeline {
   /** Run one month end-to-end from two `.dsv` exports into a parquet
     * warehouse laid out as `raw_* / staging_* / dim_* / fact_*`, and
     * return the DQ gate counts.
+    *
+    * The month runs as the reference DAG's two stages, each stage's
+    * independent Spark actions submitted at once from the driver:
+    *  1. the operator and the lease branch side by side, each extract →
+    *     raw re-read → cached monthly frame → staging write;
+    *  2. once both have filled their caches, the four dim upserts, the two
+    *     fact writes and the DQ count action together.
     */
   def runMonth(spark: SparkSession, operatorDsv: String, leaseDsv: String,
                warehouse: String, yyyymm: Int): DqReport = {
-    // ---- extract (Airflow extract_raw_* tasks) ----
-    extract(spark, operatorDsv, Staging.OperatorRawFields :+ "CYCLE_YEAR_MONTH_NO",
-      s"$warehouse/raw_operator", yyyymm)
-    extract(spark, leaseDsv, Staging.LeaseRawFields,
-      s"$warehouse/raw_lease", yyyymm)
+    // the monthly frames cached so far, dropped however the month ends
+    val cached = new ConcurrentLinkedQueue[DataFrame]
+    /** Extract (extract_raw_*) and transform (spark_transform_*) one
+      * source; the counts-only DQ gate (non-negativity) rides the staging
+      * write.
+      */
+    def branch(dsv: String, fields: Seq[String], name: String)(
+        monthly: DataFrame => DataFrame): () => (DataFrame, Observation) = () => {
+      extract(spark, dsv, fields, s"$warehouse/raw_$name", yyyymm)
+      val raw = spark.read.schema(RawStore.Schema).parquet(s"$warehouse/raw_$name")
+        .where(col("yyyymm") === yyyymm)
+      val m = monthly(raw).cache()
+      cached.add(m)
+      val (staged, obs) = Dq.observedMetrics(m, Nil, Measures)
+      writeMonth(staged, s"$warehouse/staging_$name", yyyymm)
+      (m, obs)
+    }
+    try {
+      val Seq((opMonthly, opObs), (leaseMonthly, leaseObs)) = concurrently(Seq(
+        branch(operatorDsv, Staging.OperatorRawFields :+ "CYCLE_YEAR_MONTH_NO", "operator")(
+          Staging.operatorMonthly(_, Some(yyyymm))),
+        branch(leaseDsv, Staging.LeaseRawFields, "lease")(raw =>
+          Staging.leaseMonthly(Staging.leaseWide(raw, Some(yyyymm))))))
 
-    // ---- transform (spark_transform_* jobs) ----
-    // the counts-only DQ gate (non-negativity) rides each staging write
-    val rawOp = spark.read.parquet(s"$warehouse/raw_operator")
-      .where(col("yyyymm") === yyyymm)
-    val opMonthly = Staging.operatorMonthly(rawOp, Some(yyyymm)).cache()
-    val (opStaged, opObs) = Dq.observedMetrics(opMonthly, Nil, Measures)
-    Idempotent.writeMonthSlice(opStaged, s"$warehouse/staging_operator")
+      // model curated (spark_model_curated) beside the DQ gates
+      // (dq_non_negative, dq_uniques, dq_rollup_log)
+      def write(f: => Unit): () => Seq[Long] = () => { f; Nil }
+      val Seq(dupOp, dupLease, mismatches) = concurrently(Seq(
+        write(upsertDim(spark, Curated.dimOperator(opMonthly), Seq("operator_no"), s"$warehouse/dim_operator")),
+        write(upsertDim(spark, Curated.dimDistrict(leaseMonthly), Seq("district_no"), s"$warehouse/dim_district")),
+        write(upsertDim(spark, Curated.dimField(leaseMonthly), Seq("field_no"), s"$warehouse/dim_field")),
+        write(upsertDim(spark, Curated.dimLease(leaseMonthly), Seq("lease_key"), s"$warehouse/dim_lease")),
+        write(writeMonth(Curated.factOperatorMonthly(opMonthly),
+          s"$warehouse/fact_operator_monthly", yyyymm)),
+        write(writeMonth(Curated.factLeaseMonthly(leaseMonthly),
+          s"$warehouse/fact_lease_monthly", yyyymm)),
+        () => Dq.counts(Seq(
+          Dq.duplicateKeys(opMonthly, Seq("operator_no", "yyyymm")),
+          Dq.duplicateKeys(leaseMonthly, Seq("lease_key", "yyyymm")),
+          Dq.reconcile(
+            opMonthly.select(col("operator_no") +: Measures.map(col): _*),
+            leaseMonthly.select(col("operator_no") +: Measures.map(col): _*),
+            "operator_no", Measures, tol = 0.5, checkType = "operator_vs_lease"))))).last
+      def negatives(obs: Observation) = obs.get("n_negative").asInstanceOf[Long]
+      DqReport(negatives(opObs), negatives(leaseObs), dupOp, dupLease, mismatches)
+    } finally cached.asScala.foreach(_.unpersist())
+  }
 
-    val rawLease = spark.read.parquet(s"$warehouse/raw_lease")
-      .where(col("yyyymm") === yyyymm)
-    val leaseMonthly = Staging.leaseMonthly(Staging.leaseWide(rawLease, Some(yyyymm))).cache()
-    val (leaseStaged, leaseObs) = Dq.observedMetrics(leaseMonthly, Nil, Measures)
-    Idempotent.writeMonthSlice(leaseStaged, s"$warehouse/staging_lease")
+  /** [[Idempotent.writeMonthSlice]] of month `yyyymm` that also replaces
+    * the month when `df` is empty. A dynamic overwrite replaces only the
+    * months it writes rows for, so an empty write would leave the old
+    * slice in place; here that slice is deleted instead, as the
+    * reference deletes a month before it inserts. The row count is
+    * observed on the write, so it costs no job.
+    */
+  private def writeMonth(df: DataFrame, path: String, yyyymm: Int): Unit = {
+    val rows = Observation()
+    Idempotent.writeMonthSlice(df.observe(rows, count(lit(1)).as("n")), path)
+    if (rows.get("n") == 0L) {
+      val slice = new Path(path, s"yyyymm=$yyyymm")
+      slice.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(slice, true)
+    }
+  }
 
-    // ---- model curated (spark_model_curated job) ----
-    upsertDim(spark, Curated.dimOperator(opMonthly), Seq("operator_no"), s"$warehouse/dim_operator")
-    upsertDim(spark, Curated.dimDistrict(leaseMonthly), Seq("district_no"), s"$warehouse/dim_district")
-    upsertDim(spark, Curated.dimField(leaseMonthly), Seq("field_no"), s"$warehouse/dim_field")
-    upsertDim(spark, Curated.dimLease(leaseMonthly), Seq("lease_key"), s"$warehouse/dim_lease")
-    Idempotent.writeMonthSlice(Curated.factOperatorMonthly(opMonthly),
-      s"$warehouse/fact_operator_monthly")
-    Idempotent.writeMonthSlice(Curated.factLeaseMonthly(leaseMonthly),
-      s"$warehouse/fact_lease_monthly")
-
-    // ---- DQ gates (dq_non_negative, dq_uniques, dq_rollup_log) ----
-    val Seq(dupOp, dupLease, mismatches) = Dq.counts(Seq(
-      Dq.duplicateKeys(opMonthly, Seq("operator_no", "yyyymm")),
-      Dq.duplicateKeys(leaseMonthly, Seq("lease_key", "yyyymm")),
-      Dq.reconcile(
-        opMonthly.select(col("operator_no") +: Measures.map(col): _*),
-        leaseMonthly.select(col("operator_no") +: Measures.map(col): _*),
-        "operator_no", Measures, tol = 0.5, checkType = "operator_vs_lease")))
-    def negatives(obs: Observation) = obs.get("n_negative").asInstanceOf[Long]
-    opMonthly.unpersist(); leaseMonthly.unpersist()
-    DqReport(negatives(opObs), negatives(leaseObs), dupOp, dupLease, mismatches)
+  /** Runs `thunks` at once, one thread each, and returns their results in
+    * order. The pool is made per call and its threads by the calling
+    * thread, so they inherit its active session and SparkContext local
+    * properties. Every thunk is waited for before the first failure (in
+    * thunk order) is rethrown as the thunk threw it, so no job outlives
+    * the call.
+    */
+  private def concurrently[A](thunks: Seq[() => A]): Seq[A] = {
+    val n = new AtomicInteger
+    val pool = Executors.newFixedThreadPool(thunks.size,
+      (r: Runnable) => new Thread(r, s"pdq-month-${n.incrementAndGet()}"))
+    try {
+      val done = thunks.map(t => pool.submit(() => t())).map(f => Try(f.get()))
+      done.map {
+        case Success(a) => a
+        case Failure(e: ExecutionException) => throw e.getCause
+        case Failure(e) => throw e
+      }
+    } finally pool.shutdown()
   }
 }

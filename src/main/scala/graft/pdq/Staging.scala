@@ -13,8 +13,9 @@ import graft.sources.RawStore
   *
   * Differences by design (SURVEY.md §4): the Python `to_int` UDF
   * (transform_operator.py:76) is a codegen'd rlike expression here; the
-  * double plan re-execution for the duplicate diagnostic is avoided by
-  * exposing [[duplicateGroups]] separately so callers cache the wide frame.
+  * duplicate diagnostic is [[duplicateGroups]], a separate plan a caller
+  * runs only when it wants the groups, so the staging path never pays for
+  * it (`Pipeline.runMonth` caches only the two monthly frames).
   */
 object Staging {
 

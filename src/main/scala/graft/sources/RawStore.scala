@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType, TimestampType}
 
 /** Raw-layer encode/decode (S4/S6 — reference raw.* JSONB tables).
   *
@@ -27,6 +27,15 @@ object RawStore {
       to_json(payload).as("raw"),
       current_timestamp().as("ingested_at"))
   }
+
+  /** The schema of a raw table [[encode]] wrote month-partitioned by
+    * `yyyymm` (the partition column last, as Spark reads it back). Reading
+    * with it fires no footer-inference job, and a table holding no data
+    * file reads as empty instead of failing schema inference.
+    */
+  val Schema: StructType = StructType(Seq(
+    StructField("raw", StringType), StructField("ingested_at", TimestampType),
+    StructField("yyyymm", IntegerType)))
 
   /** Tolerant all-string parse schema over an expected-field superset
     * (the reference declares both `OIL_PROD_VOL` and `LEASE_OIL_PROD_VOL`

@@ -1,9 +1,15 @@
 package graft
 
+import java.io.{File, FileNotFoundException}
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.pdq.{Dq, Pipeline}
+import graft.sources.RawStore
 
 /** End-to-end reference DAG on FIXTURES.md §A-shaped .dsv inputs:
   * extract → raw → staging → curated → DQ, twice (idempotency).
@@ -150,5 +156,88 @@ class PipelineSpec extends AnyFunSuite {
     Pipeline.upsertDim(spark, Seq((4, "d")).toDF("k", "v"), Seq("k"), path)
     assert(rows(path) === Seq((1, "a"), (2, "b2"), (3, "c"), (4, "d")))
     assert(!exists(next))
+  }
+
+  private val OpHeader = "OPERATOR_NO}OPERATOR_NAME}CYCLE_YEAR}CYCLE_MONTH}CYCLE_YEAR_MONTH}OPER_OIL_PROD_VOL}OPER_GAS_PROD_VOL}OPER_COND_PROD_VOL}OPER_CSGD_PROD_VOL"
+  private val LeaseHeader = "OPERATOR_NO}DISTRICT_NO}FIELD_NO}LEASE_NO}LEASE_NAME}CYCLE_YEAR}CYCLE_MONTH}CYCLE_YEAR_MONTH}OIL_PROD_VOL}GAS_PROD_VOL}COND_PROD_VOL}CSGD_PROD_VOL"
+  private def opRow(m: Int) = s"123456}ACME}${m / 100}}${m % 100}}$m}100}200}0}0"
+  private def leaseRow(m: Int) = s"123456}08}54321}11111}SMITH}${m / 100}}${m % 100}}$m}100}200}0}0"
+  /** An operator and a lease export holding one ACME row per month. */
+  private def exports(dir: String, months: Int*): (String, String) = {
+    new File(dir).mkdirs()
+    (write(s"$dir/op.dsv", OpHeader +: months.map(opRow): _*),
+     write(s"$dir/lease.dsv", LeaseHeader +: months.map(leaseRow): _*))
+  }
+  private val MonthTables = Seq("raw_operator", "raw_lease", "staging_operator",
+    "staging_lease", "fact_operator_monthly", "fact_lease_monthly")
+
+  test("an empty month slice replaces the month; other months stay untouched") {
+    val root = Files.createTempDirectory("pdqempty").toString
+    val (op12, lease12) = exports(s"$root/jan-feb", 202401, 202402)
+    val (op2, lease2) = exports(s"$root/feb", 202402)
+    def months(wh: String, t: String): Seq[Int] =
+      new File(s"$wh/$t").list().filter(_.startsWith("yyyymm="))
+        .map(_.stripPrefix("yyyymm=").toInt).sorted.toSeq
+    // every file of month m's slices, by name (a fresh write has fresh names)
+    def files(wh: String, m: Int): Set[(String, Long)] = MonthTables.flatMap { t =>
+      new File(s"$wh/$t/yyyymm=$m").listFiles().map(f => (s"$t/${f.getName}", f.length()))
+    }.toSet
+    val empty = Pipeline.DqReport(0, 0, 0, 0, 0)
+
+    // a first run of a month absent from the export: every slice reads as
+    // empty, and the warehouse still takes the next month
+    val first = s"$root/wh-first"
+    assert(Pipeline.runMonth(spark, op2, lease2, first, 202401) === empty)
+    MonthTables.foreach(t => assert(months(first, t) === Nil, t))
+    assert(spark.read.schema(RawStore.Schema).parquet(s"$first/raw_lease").count() === 0)
+    Pipeline.runMonth(spark, op2, lease2, first, 202402)
+    MonthTables.foreach(t => assert(months(first, t) === Seq(202402), t))
+    assert(spark.read.parquet(s"$first/dim_lease").count() === 1)
+
+    // a re-run of a loaded month against an export that no longer holds
+    // it: the month's slices go, February's files are not touched
+    val rerun = s"$root/wh-rerun"
+    Pipeline.runMonth(spark, op12, lease12, rerun, 202401)
+    Pipeline.runMonth(spark, op12, lease12, rerun, 202402)
+    MonthTables.foreach(t => assert(months(rerun, t) === Seq(202401, 202402), t))
+    val feb = files(rerun, 202402)
+    assert(Pipeline.runMonth(spark, op2, lease2, rerun, 202401) === empty)
+    MonthTables.foreach(t => assert(months(rerun, t) === Seq(202402), t))
+    assert(files(rerun, 202402) === feb)
+    assert(spark.read.parquet(s"$rerun/staging_lease").count() === 1)
+  }
+
+  test("runMonth: a failing branch throws its own exception and leaves no job, thread or cache") {
+    val root = Files.createTempDirectory("pdqfail").toString
+    val (op, _) = exports(root, 202401)
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("pdq-month-") && t.isAlive)
+    intercept[FileNotFoundException] {
+      Pipeline.runMonth(spark, op, s"$root/missing.dsv", s"$root/wh", 202401)
+    }
+    // the operator branch was waited for: it staged its month
+    assert(new File(s"$root/wh/staging_operator/yyyymm=202401").isDirectory)
+    ListenerBridge.drain(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert(sc.getPersistentRDDs.keySet.subsetOf(cachedBefore))
+    eventually(timeout(10.seconds)) { assert(poolThreads.isEmpty) }
+  }
+
+  test("runMonth fires at most the measured number of jobs") {
+    val root = Files.createTempDirectory("pdqjobs").toString
+    val (op, lease) = exports(root, 202401)
+    val counter = new Bench.Counter(spark)
+    def jobs(): Long = {
+      val before = counter.read().jobs
+      Pipeline.runMonth(spark, op, lease, s"$root/wh", 202401)
+      counter.read().jobs - before
+    }
+    try {
+      // measured on this fixture: 21 and 25 (the re-run merges four dims)
+      assert(jobs() <= 21, "first load")
+      assert(jobs() <= 25, "re-run")
+    } finally spark.sparkContext.removeSparkListener(counter)
   }
 }
