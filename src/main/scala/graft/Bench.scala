@@ -22,11 +22,10 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
   *    caches internally cannot leak blocks into its successors' memory.
   *
   * Trained/memoized honesty (round-10 verdict finding #1): several
-  * query families share JVM-level memos (BPE merge tables, k-means
-  * centroids, trade pairs, LPA labels, the suffix-array structure).
-  * `clearCache()` does not reset those, so without care pass 1 pays
-  * training and later passes report the warm apply path — a floor that
-  * understates the query. Two countermeasures:
+  * query families share JVM-level [[Memo]]s, each registered in
+  * [[Memos]]. `clearCache()` does not reset those, so without care
+  * pass 1 pays training and later passes report the warm apply path —
+  * a floor that understates the query. Two countermeasures:
   *  - [[Memos.clearAll]] runs between passes, so EVERY pass pays each
   *    training exactly once and min-over-passes includes it (memos stay
   *    live WITHIN a pass — they exist so one training feeds its whole
@@ -238,7 +237,7 @@ object Bench {
     val subsetJson = only.fold("null")(
       _.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]"))
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"jobs":${perQuery(_.counts.jobs)},"stages":${perQuery(_.counts.stages)},"tasks":${perQuery(_.counts.tasks)},"cold":$coldJson,"trained_queries":$trainedJson,"sf":"$sfDir","n_queries":${best.size},"failures":${failedQueries.size},"failed_queries":$failedJson,"baseline_subset_total":$baselineSubsetTotal,"pass_totals":$passTotals,"bench_only":$subsetJson,"spread_p50":${"%.3f".format(pct(0.5))},"spread_p90":${"%.3f".format(pct(0.9))},"noisiest_queries":$noisiest,"note":"value and per-query times are the min over successful runs across ${allPasses.size} in-JVM passes (a failed run never deflates the min; a query with no successful run is null in queries, excluded from value, and listed in failed_queries); JVM-level trained memos (BPE merges, centroids, trade pairs, LPA labels, suffix array) are RESET between passes so each pass pays every shared training once and the min includes it; trained_queries lists queries that fired a memo training in some pass; jobs/stages/tasks hold, per query, the jobs started, stages completed and their tasks in the run whose time queries reports (null where queries is null), read by a listener after the listener bus drains; cold holds first-pass (cold-JVM) per-query seconds; pass_totals holds each raw pass sum; bench_only is the SPARK_GRAFT_BENCH_ONLY subset or null for the full surface; spread_p50/p90 are per-query (max-min)/min across passes (contention telemetry: quiet machine keeps p50 near 0; trained queries legitimately spread by where training lands); baseline_subset_total sums the original 38 queries the 49s baseline was recorded on"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"jobs":${perQuery(_.counts.jobs)},"stages":${perQuery(_.counts.stages)},"tasks":${perQuery(_.counts.tasks)},"cold":$coldJson,"trained_queries":$trainedJson,"sf":"$sfDir","n_queries":${best.size},"failures":${failedQueries.size},"failed_queries":$failedJson,"baseline_subset_total":$baselineSubsetTotal,"pass_totals":$passTotals,"bench_only":$subsetJson,"spread_p50":${"%.3f".format(pct(0.5))},"spread_p90":${"%.3f".format(pct(0.9))},"noisiest_queries":$noisiest,"note":"value and per-query times are the min over successful runs across ${allPasses.size} in-JVM passes (a failed run never deflates the min; a query with no successful run is null in queries, excluded from value, and listed in failed_queries); JVM-level trained memos (every registered graft.Memo) are RESET between passes so each pass pays every shared training once and the min includes it; trained_queries lists queries that fired a memo training in some pass; jobs/stages/tasks hold, per query, the jobs started, stages completed and their tasks in the run whose time queries reports (null where queries is null), read by a listener after the listener bus drains; cold holds first-pass (cold-JVM) per-query seconds; pass_totals holds each raw pass sum; bench_only is the SPARK_GRAFT_BENCH_ONLY subset or null for the full surface; spread_p50/p90 are per-query (max-min)/min across passes (contention telemetry: quiet machine keeps p50 near 0; trained queries legitimately spread by where training lands); baseline_subset_total sums the original 38 queries the 49s baseline was recorded on"}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     try {
       val w = new java.io.PrintWriter(new java.io.File(out), "UTF-8")

@@ -141,8 +141,7 @@ object LlmQueries {
         sum(col("probe_score_micro")).cast("long").as("sum_score_micro"))
   }
 
-  private val minhashPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val minhashPairsMemo = new Memo[DataFrame]("minhash_pairs")
 
   /** One [[MinHash.dupPairs]] candidate table per (app, sfDir) at the
     * contract grain (n=3, k=8, rowsPerBand=2) — the shared intermediate
@@ -154,7 +153,7 @@ object LlmQueries {
     * band fan-out), size-adaptive storage.
     */
   private def minhashPairsT(s: SparkSession, dir: String): DataFrame =
-    Memos.sessionCached(minhashPairsMemo, s, dir) {
+    minhashPairsMemo.session(s, dir) {
       Memos.adaptiveCheckpoint(
         MinHash.dupPairs(tPar(s, dir, "documents"), "doc_id", "text"))
     }
@@ -187,8 +186,7 @@ object LlmQueries {
         "doc_id", "text", k = 3, w = 4)
       .orderBy(col("doc_id"), col("pos"), col("fp"))
 
-  private val winnowFpMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val winnowFpMemo = new Memo[DataFrame]("winnow_fingerprints")
 
   /** One winnow `(__id, fp)` materialization per (app, sfDir) at the
     * contract grain (k=3, w=4) — [[Dedup.winnowFingerprintTable]]'s own
@@ -200,7 +198,7 @@ object LlmQueries {
     * between passes.
     */
   private def winnowFpTable(s: SparkSession, dir: String): DataFrame =
-    Memos.sessionCached(winnowFpMemo, s, dir) {
+    winnowFpMemo.session(s, dir) {
       Dedup.winnowFingerprintTable(tPar(s, dir, "documents"), "doc_id",
         "text", k = 3, w = 4)
     }
@@ -1616,7 +1614,7 @@ object LlmQueries {
     * level.
     */
   private def dsirWeights(s: SparkSession, dir: String): DataFrame =
-    Memos.sessionCached(dsirWeightsMemo, s, dir) {
+    dsirWeightsMemo.session(s, dir) {
       Memos.adaptiveCheckpoint(dsirWeightsTrain(s, dir))
     }
 
@@ -1888,8 +1886,7 @@ object LlmQueries {
   /** Rounds of the unigram hard-EM training contract (both engines). */
   private val UnigramTrainRounds = 2
 
-  private val unigramVocabMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val unigramVocabMemo = new Memo[DataFrame]("unigram_vocab")
 
   /** One [[graft.llm.UnigramLm.trainVocab]] run per (session, dir):
     * the trained-vocab dump and the trained-tokenization stats must
@@ -1898,7 +1895,7 @@ object LlmQueries {
     * the other session memos).
     */
   private def unigramTrained(s: SparkSession, dir: String): DataFrame =
-    Memos.sessionCached(unigramVocabMemo, s, dir) {
+    unigramVocabMemo.session(s, dir) {
       UnigramLm.trainVocab(
         UnigramLm.wordForms(UnigramLm.wordOccurrences(
           tPar(s, dir, "documents"), "doc_id", "text")),
@@ -1909,7 +1906,7 @@ object LlmQueries {
   private val UnigramTargetMulti = 16
 
   private val unigramSizedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Int)]()
+    new Memo[(DataFrame, Int)]("unigram_vocab_sized")
 
   /** One [[graft.llm.UnigramLm.trainVocabToSize]] run per (session,
     * dir): the sized-vocab query and its oracle-entry generator must
@@ -1917,25 +1914,12 @@ object LlmQueries {
     */
   private def unigramTrainedSized(s: SparkSession,
                                   dir: String): (DataFrame, Int) =
-    Memos.sessionCached(unigramSizedMemo, s, dir) {
+    unigramSizedMemo.session(s, dir) {
       UnigramLm.trainVocabToSize(
         UnigramLm.wordForms(UnigramLm.wordOccurrences(
           tPar(s, dir, "documents"), "doc_id", "text")),
         targetMulti = UnigramTargetMulti)
     }
-
-  /** The derived round count for `dir` if a training already ran this
-    * session (the [[Similarity.trainedCentroids]] peek pattern —
-    * oracle emission must reuse the query's own run, never retrain).
-    */
-  private def sizedRoundsPeek(dir: String): Option[Int] = {
-    val it = unigramSizedMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.endsWith(":" + dir)) return Some(e.getValue._2)
-    }
-    None
-  }
 
   /** Unigram training under the TARGET-VOCAB stopping rule
     * ([[graft.llm.UnigramLm.trainVocabToSize]]): prune until ≤
@@ -2013,8 +1997,7 @@ object LlmQueries {
 
   // ----- suffix array (exact substring structure) -------------------------
 
-  private val saMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, SuffixArrayResult]()
+  private val saMemo = new Memo[SuffixArrayResult]("suffix_array")
 
   /** One prefix-doubling build per (app, sfDir) — the three suffix
     * queries read the same checkpointed rank structure (keyed like
@@ -2022,25 +2005,13 @@ object LlmQueries {
     * restarted session can never read a dead session's plans).
     */
   private def saFor(s: SparkSession, dir: String): SuffixArrayResult =
-    Memos.sessionCached(saMemo, s, dir) {
+    saMemo.session(s, dir) {
       SuffixArray.build(tPar(s, dir, "documents"), "doc_id", "text")
     }
 
-  /** Drop this object's JVM-level shared memos (bench pass isolation —
-    * see [[Memos.clearAll]]).
-    */
-  private[graft] def clearMemos(): Unit = {
-    saMemo.clear(); saLcpMemo.clear(); unigramVocabMemo.clear()
-    unigramSizedMemo.clear(); probeMemo.clear()
-    dsirWeightsMemo.clear(); bigramLmMemo.clear(); winnowFpMemo.clear()
-    minhashPairsMemo.clear()
-  }
+  private val dsirWeightsMemo = new Memo[DataFrame]("dsir_weights")
 
-  private val dsirWeightsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private val bigramLmMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val bigramLmMemo = new Memo[DataFrame]("bigram_lm")
 
   /** The corpus char-bigram LM, trained once per (app, sfDir) — the
     * same shared-training discipline as [[saFor]]/[[SparkEntry]]'s LPA
@@ -2054,14 +2025,13 @@ object LlmQueries {
     * measured sf100 OOM).
     */
   private def corpusBigramLm(s: SparkSession, dir: String): DataFrame =
-    Memos.sessionCached(bigramLmMemo, s, dir) {
+    bigramLmMemo.session(s, dir) {
       LangModel.trainFromBigrams(
         LangModel.bigramTable(tPar(s, dir, "documents"), "doc_id", "text"))
         .localCheckpoint(true)
     }
 
-  private val saLcpMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val saLcpMemo = new Memo[DataFrame]("suffix_adjacent_lcp")
 
   /** The adjacent-LCP lifting (≈2·levels joins) feeds both the LCP
     * spectrum and the dup-position queries — computed once per (app,
@@ -2069,7 +2039,7 @@ object LlmQueries {
     * memo hands back materialized blocks.
     */
   private def saLcpFor(s: SparkSession, dir: String): DataFrame =
-    Memos.sessionCached(saLcpMemo, s, dir) {
+    saLcpMemo.session(s, dir) {
       SuffixArray.adjacentLcp(saFor(s, dir))
     }
 
@@ -2255,12 +2225,12 @@ object LlmQueries {
     LinearProbe.filterStats(tPar(s, dir, "documents"), feats, traj.last)
   }
 
-  private val probeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, Seq[Array[Long]])]()
+  private val probeMemo =
+    new Memo[(DataFrame, Seq[Array[Long]])]("linear_probe")
 
   /** One probe training per (app, sfDir) — the trace, confusion and
     * gate queries all read the same checkpointed feature frame and
-    * trajectory ([[Memos.sessionCached]]: bench-honest, evicting).
+    * trajectory ([[Memo.session]]: bench-honest, evicting).
     * Checkpoint (not persist): the memo outlives a consumer query, and
     * the standing post-query `clearCache()` would drop persisted
     * blocks but leaves checkpointed RDD blocks alone (the saMemo
@@ -2271,7 +2241,7 @@ object LlmQueries {
     */
   private def probeFor(s: SparkSession,
                        dir: String): (DataFrame, Seq[Array[Long]]) =
-    Memos.sessionCached(probeMemo, s, dir) {
+    probeMemo.session(s, dir) {
       val feats = Memos.bigCheckpoint(
         LinearProbe.featureRows(tPar(s, dir, "documents")))
       (feats, LinearProbe.train(feats))
@@ -3620,7 +3590,7 @@ object LlmQueries {
     // centroids: reuse the round count the query's own training run
     // produced (peek the memo; train via the active session otherwise)
     val sizedRoundsOpt = sys.props.get("graft.oracle.sfDir").flatMap { dir =>
-      sizedRoundsPeek(dir).orElse {
+      unigramSizedMemo.peek(dir).map(_._2).orElse {
         org.apache.spark.sql.SparkSession.getActiveSession
           .map(s => unigramTrainedSized(s, dir)._2)
       }

@@ -1,31 +1,19 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
-/** JVM-level memo plumbing shared by the trained/shared-computation
-  * caches ([[graft.llm.Bpe]] merge tables, [[graft.llm.Similarity]]
-  * centroids, [[SparkEntry]]'s trade pairs / LPA labels,
-  * [[LlmQueries]]'s suffix-array structures).
+/** JVM-level memo plumbing: the registry of every [[Memo]] and the
+  * checkpoint levels the memoized frames use.
   *
-  * Two jobs:
-  *
-  *  1. '''Session-scoped caching with eviction.''' Frames memoized per
-  *     (applicationId, startTime, dir) must not accumulate entries for
-  *     dead sessions — a restarted session in one JVM would otherwise
-  *     pin checkpointed DataFrames whose blocks are gone (round-10
-  *     ADVICE). [[sessionCached]] evicts every key belonging to a
-  *     different session before inserting a new one.
-  *  2. '''Training visibility for the bench.''' Min-over-passes
-  *     benchmarking hides training cost behind the memo: pass 1 pays,
-  *     passes 2+ hit the cache, and the reported floor is the warm
-  *     apply path (round-10 verdict finding #1). Every memo-training
-  *     closure calls [[markTrained]]; [[graft.Bench]] snapshots
-  *     [[trainedEvents]] around each query to label which queries
-  *     train, and calls the owners' `clearMemos()` between passes so
-  *     every pass pays training and the floor stays honest.
+  * Min-over-passes benchmarking hides training cost behind a memo:
+  * pass 1 pays, passes 2+ hit the cache, and the reported floor is the
+  * warm apply path (round-10 verdict finding #1). [[graft.Bench]]
+  * snapshots [[trainedEvents]] around each query to label which
+  * queries train, and calls [[clearAll]] between passes so every pass
+  * pays training and the floor stays honest. Both cover every memo,
+  * because a [[Memo]] registers itself here when it is built.
   */
 object Memos {
 
@@ -66,41 +54,18 @@ object Memos {
     else bigCheckpoint(df)
   }
 
-  private val trainings = new AtomicLong(0L)
+  private val registry = new ConcurrentLinkedQueue[Memo[_]]()
 
-  /** Count of memo-training events since JVM start (monotonic). */
-  def trainedEvents: Long = trainings.get()
+  private[graft] def register(m: Memo[_]): Unit = { registry.add(m); () }
 
-  /** Record that a memo just paid a training/shared computation. */
-  def markTrained(): Unit = { trainings.incrementAndGet(); () }
-
-  /** Memoize `train` under key `(applicationId, startTime, dir)`,
-    * evicting entries from any OTHER session on insert: stale keys
-    * would hold references to checkpointed frames whose blocks died
-    * with their context. The (appId, startTime) pair is stable for a
-    * context's lifetime and never reused after stop (unlike
-    * identityHashCode — round-8 ADVICE).
+  /** Count of memo-training events since JVM start (monotonic): the sum
+    * over every registered [[Memo]].
     */
-  def sessionCached[V](m: ConcurrentHashMap[String, V], s: SparkSession,
-                       dir: String)(train: => V): V = {
-    val prefix =
-      s"${s.sparkContext.applicationId}:${s.sparkContext.startTime}:"
-    val key = prefix + dir
-    if (!m.containsKey(key)) {
-      val it = m.keySet().iterator()
-      while (it.hasNext) { if (!it.next().startsWith(prefix)) it.remove() }
-    }
-    m.computeIfAbsent(key, _ => { markTrained(); train })
-  }
+  def trainedEvents: Long = registry.asScala.iterator.map(_.trained).sum
 
-  /** Drop every JVM-level trained/shared memo (all owners). Bench-only:
-    * [[graft.Verify]] must NOT call this — the oracle emitters rely on
-    * reading the exact literals the product query trained.
+  /** Drop every registered memo's entries. Bench-only: [[graft.Verify]]
+    * must NOT call this — the oracle emitters rely on reading the exact
+    * literals the product query trained.
     */
-  def clearAll(): Unit = {
-    SparkEntry.clearMemos()
-    LlmQueries.clearMemos()
-    graft.llm.Similarity.clearMemos()
-    graft.llm.Bpe.clearMemos()
-  }
+  def clearAll(): Unit = registry.forEach(_.clear())
 }

@@ -1863,16 +1863,10 @@ object SparkEntry {
     * release never touches the shared frame. Bounded: one small
     * pair-grain frame per fixture dir.
     */
-  private val tradePairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val tradePairsMemo = new Memo[DataFrame]("trade_pairs")
 
-  // keyed by (applicationId, startTime): stable for a context's lifetime
-  // and never reused after stop/GC, unlike identityHashCode (round-8
-  // ADVICE: a recycled hash could hand back a frame whose checkpoint
-  // blocks belong to a dead context); Memos.sessionCached evicts dead-
-  // session keys on insert (round-10 ADVICE)
   private def tradePairs(s: SparkSession, dir: String): DataFrame =
-    Memos.sessionCached(tradePairsMemo, s, dir) {
+    tradePairsMemo.session(s, dir) {
       Memos.bigCheckpoint(t(s, dir, "orders")
         .join(t(s, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
@@ -1960,8 +1954,7 @@ object SparkEntry {
     * "densely attached" grouping that splits what connected components
     * lumps together.
     */
-  private val lpLabelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val lpLabelsMemo = new Memo[DataFrame]("lpa_trade_labels")
 
   /** 3-round LPA labeling over the trade graph, shared by the
     * communities query and the modularity eval (labelPropagation
@@ -1969,19 +1962,12 @@ object SparkEntry {
     * blocks; keyed like [[tradePairsMemo]]).
     */
   private def lpTradeLabels(s: SparkSession, dir: String): DataFrame =
-    Memos.sessionCached(lpLabelsMemo, s, dir) {
+    lpLabelsMemo.session(s, dir) {
       // assumeCanonical: distinct, loop-free, direction-disjoint (offset
       // supplier ids) by construction
       graft.ops.Communities.labelPropagation(tradeEdgesDirected(s, dir),
         "src", "dst", iters = 3, assumeCanonical = true)
     }
-
-  /** Drop this object's JVM-level shared memos (bench pass isolation —
-    * see [[Memos.clearAll]]).
-    */
-  private[graft] def clearMemos(): Unit = {
-    tradePairsMemo.clear(); lpLabelsMemo.clear()
-  }
 
   private def communitiesTradeGraph(s: SparkSession, dir: String): DataFrame =
     lpTradeLabels(s, dir).orderBy(col("id"))

@@ -530,8 +530,7 @@ object Bpe {
     * pay for it, and an oracle emitter must see the EXACT merges the
     * query trained.
     */
-  private val mergeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Merge]]()
+  private val mergeMemo = new graft.Memo[Seq[Merge]]("bpe_merges")
 
   /** [[learnMerges]] through the memo: at most one training per tag per
     * JVM; later callers get the same merge list.
@@ -539,14 +538,13 @@ object Bpe {
   def learnMergesCached(tag: String, words: => DataFrame, wordCol: String,
                         cntCol: String, numMerges: Int, passes: Int = 8,
                         minCount: Long = 1L): Seq[Merge] =
-    mergeMemo.computeIfAbsent(tag, { _ =>
-      graft.Memos.markTrained()
+    mergeMemo(tag) {
       learnMerges(words, wordCol, cntCol, numMerges, passes, minCount)
         .collect()
         .map(r => Merge(r.getLong(0), r.getString(1), r.getString(2),
           r.getLong(3)))
         .toSeq
-    })
+    }
 
   /** [[learnMergesBatched]] through the same memo (distinct tag —
     * the batched trainer must actually run to be certified, not read
@@ -557,20 +555,14 @@ object Bpe {
                                numMerges: Int, passes: Int = 8,
                                minCount: Long = 1L, batchK: Int = 8)
     : Seq[Merge] =
-    mergeMemo.computeIfAbsent(tag, { _ =>
-      graft.Memos.markTrained()
+    mergeMemo(tag) {
       learnMergesBatched(words, wordCol, cntCol, numMerges, passes,
         minCount, batchK)
         .collect()
         .map(r => Merge(r.getLong(0), r.getString(1), r.getString(2),
           r.getLong(3)))
         .toSeq
-    })
-
-  /** Drop the trained-merge memo (bench pass isolation — see
-    * [[graft.Memos.clearAll]]).
-    */
-  private[graft] def clearMemos(): Unit = mergeMemo.clear()
+    }
 
   /** [[learnMergesLocal]] through the same memo (distinct tag — the
     * local trainer must actually run to be certified, not read a
@@ -581,11 +573,10 @@ object Bpe {
                              numMerges: Int, passes: Int = 8,
                              minCount: Long = 1L,
                              maxForms: Int = 4000000): Seq[Merge] =
-    mergeMemo.computeIfAbsent(tag, { _ =>
-      graft.Memos.markTrained()
+    mergeMemo(tag) {
       learnMergesLocal(words, wordCol, cntCol, numMerges, passes,
         minCount, maxForms)
-    })
+    }
 
   /** The cached merges as a frame (rank, lft, rgt, pair_count). */
   def mergesFrame(spark: org.apache.spark.sql.SparkSession,

@@ -231,8 +231,7 @@ object Similarity {
     * averaging is deterministic for a fixed layout only up to partial-
     * sum merge order, so "train twice and hope" is not a contract.
     */
-  private val centroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
+  private val centroidMemo = new graft.Memo[Array[Array[Float]]]("centroids")
 
   /** [[kMeansCentroids]] through the memo: at most one training per tag
     * per JVM; later callers (including [[graft.LlmQueries]]'s oracle
@@ -241,19 +240,11 @@ object Similarity {
   def kMeansCentroidsCached(tag: String, corpus: => DataFrame, idCol: String,
                             vecCol: String, k: Int, iters: Int)
       : Array[Array[Float]] =
-    centroidMemo.computeIfAbsent(tag, { _ =>
-      graft.Memos.markTrained()
-      kMeansCentroids(corpus, idCol, vecCol, k, iters)
-    })
-
-  /** Drop the trained-centroid memo (bench pass isolation — see
-    * [[graft.Memos.clearAll]]).
-    */
-  private[graft] def clearMemos(): Unit = centroidMemo.clear()
+    centroidMemo(tag)(kMeansCentroids(corpus, idCol, vecCol, k, iters))
 
   /** The memoized centroids for `tag`, if that training already ran. */
   def trainedCentroids(tag: String): Option[Array[Array[Float]]] =
-    Option(centroidMemo.get(tag))
+    centroidMemo.get(tag)
 
   def kMeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                       k: Int, iters: Int = 5): Array[Array[Float]] = {
@@ -388,35 +379,20 @@ object Similarity {
     * fits in executor memory (m bytes/vector) and one that doesn't
     * (4·dims bytes/vector), which is the entire point of PQ.
     *
-    * Memoized per (tag, subspace) through the same [[centroidMemo]]
-    * discipline as IVF, so an oracle emitter can embed the EXACT
-    * trained floats.
+    * Memoized per tag like the IVF [[centroidMemo]], all `m` codebooks
+    * in one entry, so an oracle emitter can embed the EXACT trained
+    * floats of one training.
     */
   def pqCodebooksCached(tag: String, corpus: => DataFrame, idCol: String,
                         vecCol: String, dims: Int, m: Int, k: Int,
                         iters: Int): Array[Array[Array[Float]]] = {
     require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
-    // all-or-nothing under a per-JVM training lock (r12 ADVICE): two
-    // concurrent joint trainings could otherwise interleave slots from
-    // two runs via bare putIfAbsent (float avg is merge-order
-    // nondeterministic), memoizing a codebook mixing both. The
-    // double-check inside the lock makes exactly one run populate all
-    // m slots; training is rare, so a coarse lock costs nothing.
-    trainedCodebooks(tag, m).getOrElse {
-      pqTrainLock.synchronized {
-        trainedCodebooks(tag, m).getOrElse {
-          graft.Memos.markTrained()
-          val books =
-            pqCodebooksJoint(corpus, idCol, vecCol, dims, m, k, iters)
-          (0 until m).foreach(s =>
-            centroidMemo.putIfAbsent(s"$tag#$s", books(s)))
-          (0 until m).map(s => centroidMemo.get(s"$tag#$s")).toArray
-        }
-      }
-    }
+    codebookMemo(tag)(pqCodebooksJoint(corpus, idCol, vecCol, dims, m, k,
+      iters))
   }
 
-  private val pqTrainLock = new Object
+  private val codebookMemo =
+    new graft.Memo[Array[Array[Array[Float]]]]("pq_codebooks")
 
   /** All `m` subspace codebooks trained in ONE Lloyd's loop (r12,
     * guide §1.2 driver-action hygiene): the per-subspace trainer paid
@@ -462,10 +438,8 @@ object Similarity {
   }
 
   /** The memoized PQ codebooks for `tag`, if training already ran. */
-  def trainedCodebooks(tag: String, m: Int): Option[Array[Array[Array[Float]]]] = {
-    val subs = (0 until m).map(s => trainedCentroids(s"$tag#$s"))
-    if (subs.forall(_.isDefined)) Some(subs.map(_.get).toArray) else None
-  }
+  def trainedCodebooks(tag: String, m: Int): Option[Array[Array[Array[Float]]]] =
+    codebookMemo.get(tag).filter(_.length == m)
 
   /** PQ top-k with asymmetric distance computation (ADC) + exact
     * re-rank column: the corpus is ENCODED once (per subspace, the

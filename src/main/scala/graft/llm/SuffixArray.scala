@@ -253,14 +253,12 @@ object SuffixArray {
       .coalesce(confParts(seq))
       .localCheckpoint(true)
 
-    val debug = sys.env.contains("GRAFT_SUFFIX_DEBUG")
     var level = level0
     var prefLen = 1L
     var nTies = level.where(col("tied")).count()
     var levels = Vector(SuffixLevel(1L,
       level.where(col("tied")).select(col("g"), col("r")), nTies))
     while (nTies > 0 && prefLen < n) {
-      val tRound0 = System.nanoTime()
       // The tied set shrinks geometrically, so once it fits the
       // broadcast budget the round stops exchanging ANY corpus-grain
       // frame (r13; guide §2.4/§3.1): broadcast the tied rows against a
@@ -335,11 +333,9 @@ object SuffixArray {
         .coalesce(confParts(level))
         .localCheckpoint(true)
       prefLen *= 2
-      val tCkpt = System.nanoTime()
       nTies = level.where(col("tied")).count()
       levels :+= SuffixLevel(prefLen,
         level.where(col("tied")).select(col("g"), col("r")), nTies)
-      if (debug) println(f"[suffix] round -> prefLen=$prefLen%5d nTies=$nTies%8d small=$small ckpt=${(tCkpt - tRound0) / 1e9}%5.2f count=${(System.nanoTime() - tCkpt) / 1e9}%5.2f s")
     }
     SuffixArrayResult(seq, level.select(col("g"), col("r")), levels, n)
   }
@@ -374,8 +370,6 @@ object SuffixArray {
         lit(0L).as("lcp"))
       .localCheckpoint(true)
     var lastCp = pairs
-    val debug = sys.env.contains("GRAFT_SUFFIX_DEBUG")
-    var tLift = System.nanoTime()
     val walk = res.levels.reverse.filter(_.nTied > 0)
     for ((lvl, i) <- walk.zipWithIndex) {
       val p = lvl.prefixLen
@@ -408,10 +402,6 @@ object SuffixArray {
         pairs = step.localCheckpoint(true)
         lastCp = pairs
         org.apache.spark.sql.graftbridge.CheckpointBridge.release(prev)
-        if (debug) {
-          println(f"[suffix] lift level p=$p%5d (i=$i) ${(System.nanoTime() - tLift) / 1e9}%6.2f s")
-          tLift = System.nanoTime()
-        }
       } else pairs = step
     }
     pairs

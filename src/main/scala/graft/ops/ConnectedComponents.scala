@@ -142,11 +142,9 @@ object ConnectedComponents {
       .distinct()
       .localCheckpoint(true)
     var eSig = edgeSignature(e)
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val tIter0 = System.nanoTime()
       // Once the contracting edge set fits the broadcast budget (count
       // free from the previous signature), the min tables broadcast and
       // both star joins run map-side — the raw neighbor/edge frames are
@@ -187,7 +185,6 @@ object ConnectedComponents {
       e = ss
       eSig = ssSig
       iter += 1
-      if (debug) println(f"[cc] alt=$iter edges=${eSig._1}%8d ${(System.nanoTime() - tIter0) / 1e9}%6.2f s")
     }
     if (!converged)
       throw new IllegalStateException(

@@ -102,9 +102,14 @@ object Pipeline {
     *     raw re-read → cached monthly frame → staging write;
     *  2. once both have filled their caches, the four dim upserts, the two
     *     fact writes and the DQ count action together.
+    *
+    * A `yyyymm` below the extract floor (200001) or with a month outside
+    * 1..12 throws `IllegalArgumentException` before anything is written.
     */
   def runMonth(spark: SparkSession, operatorDsv: String, leaseDsv: String,
                warehouse: String, yyyymm: Int): DqReport = {
+    require(yyyymm >= 200001 && (1 to 12).contains(yyyymm % 100),
+      s"yyyymm=$yyyymm is not a month at or after 200001")
     // the monthly frames cached so far, dropped however the month ends
     val cached = new ConcurrentLinkedQueue[DataFrame]
     /** Extract (extract_raw_*) and transform (spark_transform_*) one

@@ -4,14 +4,13 @@ import org.apache.spark.sql.functions._
 
 /** Dev-only profiling harness (not part of the driver contract, never
   * invoked by Bench/Verify): splits suffix_dup_positions' cost into
-  * build / adjacentLcp / final query, with `GRAFT_SUFFIX_DEBUG=1`
-  * adding per-round tie counts and times from the operator itself.
-  * Both optimization rounds (r12, r13) drove their suffix decisions
-  * from this harness — it stays because the suffix family remains the
-  * most expensive surface and the next round will need the same
-  * measurements (r12 ADVICE asked to move/delete it; kept, documented,
-  * since the repo has no separate dev source set and the main is
-  * ~50 lines with zero production callers).
+  * build / adjacentLcp / final query. Both optimization rounds (r12,
+  * r13) drove their suffix decisions from this harness — it stays
+  * because the suffix family remains the most expensive surface and
+  * the next round will need the same measurements (r12 ADVICE asked
+  * to move/delete it; kept, documented, since the repo has no separate
+  * dev source set and the main is ~50 lines with zero production
+  * callers).
   */
 object ProfileSuffix {
   def main(args: Array[String]): Unit = {

@@ -225,6 +225,17 @@ class PipelineSpec extends AnyFunSuite {
     eventually(timeout(10.seconds)) { assert(poolThreads.isEmpty) }
   }
 
+  test("runMonth rejects an out-of-range month and writes nothing") {
+    val root = Files.createTempDirectory("pdqmonth").toString
+    val (op, lease) = exports(root, 202401)
+    for (m <- Seq(202413, 202400, 199912, 0)) {
+      intercept[IllegalArgumentException] {
+        Pipeline.runMonth(spark, op, lease, s"$root/wh", m)
+      }
+    }
+    assert(!new File(s"$root/wh").exists)
+  }
+
   test("runMonth fires at most the measured number of jobs") {
     val root = Files.createTempDirectory("pdqjobs").toString
     val (op, lease) = exports(root, 202401)
